@@ -270,7 +270,7 @@ def _prep(spark, sf_dir: str) -> None:
     # Step 3 of the offline maintenance: orders+lineitem hash-bucketed on
     # orderkey (catalog.build_bucketed) so the fact-chain joins in q3/q5
     # run exchange-free. Same values, different physical layout; cached
-    # across processes via the metastore + corpus fingerprint.
+    # per session via the in-memory catalog + corpus fingerprint.
     from kwery_spark.catalog import build_bucketed
 
     build_bucketed(spark, sf_dir)
@@ -519,7 +519,7 @@ def main() -> None:
     # 2. analyze_tables + CBO confs: rowCount/NDV stats so q3/q5 plan
     #    join order cost-based (the baseline engine likewise plans from
     #    parquet metadata it reads before execution).
-    # Both steps are fingerprint/metastore-cached across runs.
+    # Both steps are fingerprint-cached per session (in-memory catalog).
     _prep(spark, sf_dir)
     queries = entrymod.queries()
     load_before = _loadavg()

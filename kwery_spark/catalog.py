@@ -525,8 +525,8 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
     # fingerprint so regenerated testdata invalidates schemas + stats
     db = _db_name(sf_dir, optimized=opt is not None)
     # warm-start fast path: if the LAST table of the loop already carries
-    # row stats, a prior run completed — skip the per-table checks
-    # (~1 s of metastore round-trips per table otherwise)
+    # row stats, a prior call in this session completed — skip the
+    # per-table checks (~1 s of catalog round-trips per table otherwise)
     try:
         last = f"{db}.{TABLES[-1]}"
         # tableExists first: probing DESCRIBE on a missing table raises an
@@ -551,11 +551,12 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
                     full, path=os.path.join(data_dir, f"{name}.parquet"), source="parquet"
                 )
             elif _has_row_stats(spark, full):
-                # already analyzed (the metastore persists across sessions)
-                # — skip the re-scan. Stats go stale only if the testdata
-                # corpus is regenerated in place; drop the kwery_* db to
-                # force a re-ANALYZE in that case. Stale stats can only
-                # mis-cost a plan, never change results.
+                # already analyzed earlier in this session (the catalog
+                # is in-memory, per session) — skip the re-scan. Stats go
+                # stale only if the testdata corpus is regenerated in place
+                # mid-session; drop the kwery_* db to force a re-ANALYZE in
+                # that case. Stale stats can only mis-cost a plan, never
+                # change results.
                 continue
             # column stats support atomic types only (ANALYZE rejects
             # array<float> embeddings); nested columns still get table
@@ -601,8 +602,8 @@ def _has_row_stats(spark: SparkSession, full: str) -> bool:
 
 def stats_db(spark: SparkSession, sf_dir: str) -> str | None:
     """Name of the ANALYZEd catalog database for ``sf_dir`` if one exists
-    (i.e. ``analyze_tables`` ran, this session or a prior one — the
-    embedded metastore persists), else None. When this process runs on
+    (i.e. ``analyze_tables`` ran in this session — the catalog is
+    in-memory and per session), else None. When this process runs on
     an optimized layout, only the optimized-layout db is eligible (a raw
     db's stats describe other files)."""
     try:
@@ -680,9 +681,10 @@ def _bucketed_db_name(sf_dir: str) -> str:
 def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
     """Write orders + lineitem as managed bucketed tables (hash(orderkey)
     into N buckets, one file per bucket, sorted within) and ANALYZE them.
-    Idempotent across processes: the db name embeds the corpus
-    fingerprint, so a regenerated corpus is never served stale buckets,
-    and a completed build is detected via row stats on the last table.
+    Idempotent per session (the catalog is in-memory, so every new
+    session rebuilds): the db name embeds the corpus fingerprint, so a
+    regenerated corpus is never served stale buckets, and a completed
+    build is detected via row stats on the last table.
     Stale fingerprint siblings for the same corpus basename are dropped
     CASCADE first — unlike stats-only dbs these hold real data copies."""
     db = _bucketed_db_name(sf_dir)
@@ -748,8 +750,8 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
 
 def bucketed_db(spark: SparkSession, sf_dir: str) -> str | None:
     """Name of the bucketed-layout database for ``sf_dir`` if a completed
-    build exists (this session or a prior one — the metastore and
-    warehouse persist), else None. Same probe discipline as stats_db:
+    build exists in this session (the catalog is in-memory and per
+    session), else None. Same probe discipline as stats_db:
     never raises on a missing corpus."""
     try:
         db = _bucketed_db_name(sf_dir)

@@ -18,9 +18,22 @@ from pyspark.sql import SparkSession
 # empty 1-row tasks.
 _LOCAL_SHUFFLE_PARTITIONS = "8"
 
-# Repo root — warehouse + Derby metastore are pinned here so catalog
-# state is (a) persistent across sessions and (b) never written outside
-# the repo, regardless of the caller's working directory.
+# Entries in Spark's generated-class cache (static conf, default 100).
+# Sized to the largest working set one JVM runs here: the full 323-key
+# registry in one session (tools/check.py, the test suite) compiles 4112
+# distinct classes on a cold pass at sf0.001 and 4119 at sf0.01. Guava
+# enforces the bound per cache segment, so it needs headroom over the
+# set. At the default, a warm pass of either 10-key benchmark workload
+# recompiled 17-99 classes through Janino; at 5000 it compiles none, for
+# +30 MB of Metaspace after a full-registry pass (212 -> 241 MB).
+# BASELINE.md "Codegen class cache" has the measurements.
+_CODEGEN_CACHE_ENTRIES = "5000"
+
+# Repo root — the warehouse (managed tables written by
+# catalog.build_bucketed) is pinned here so it is never written outside
+# the repo, regardless of the caller's working directory. The session has
+# no Hive support: catalog state (databases, tables, stats) lives in the
+# in-memory catalog and lasts for one session only.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -47,7 +60,9 @@ def _sweep_scratch_once() -> None:
 def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSession.Builder:
     _sweep_scratch_once()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # the cores this process may run on (unlike os.cpu_count, this
+        # honors the CPU affinity mask), so local[N] fits the box
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -58,6 +73,7 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS)
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
         # Split the single-file-per-table corpus into multi-task scans so
         # all cores participate (files here are 10 MB-ish; the 128 MB
         # default makes every scan one task). At cluster scale the default
@@ -93,15 +109,6 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.warehouse.dir", f"file://{_REPO_ROOT}/spark-warehouse")
-        # Pin the Derby metastore into the repo via the JDO URL, NOT via
-        # spark.driver.extraJavaOptions -Dderby.system.home: overriding
-        # extraJavaOptions clobbers pyspark's default JVM flags (incl.
-        # --add-modules=jdk.incubator.vector) and costs a measured ~25%
-        # across the whole bench when the SIMD paths fall back to scalar.
-        .config(
-            "spark.hadoop.javax.jdo.option.ConnectionURL",
-            f"jdbc:derby:;databaseName={_REPO_ROOT}/metastore_db;create=true",
-        )
     )
 
 
