@@ -21,60 +21,19 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import table
+from kwery_spark.catalog import memo, table
 from kwery_spark.registry import register
 
 _D = 0.85  # damping
 
 
-# ---------------------------------------------------------------------------
-# Session-scoped shared-artifact cache (VERDICT r10 item 4): the graph
-# family's keys all derive from the same weighted customer-supplier pair
-# table, and at sf30 each key paid the ~350M-edge build again — the r9
-# decomposition proved the BUILD dominates every iterative key, not the
-# rounds. Checkpointed artifacts are memoized per (Spark application,
-# resolved sf_dir, lineitem corpus fingerprint), so:
-#   * a standalone run (check.py, driver gate, audit) builds exactly what
-#     it always built — first-touch plans are unchanged;
-#   * a multi-key session (scale sweep, full gate, bench) pays each build
-#     once and every later consumer starts from the checkpoint scan.
-# Keying on the corpus fingerprint means a regenerated corpus can never
-# serve stale edges; keying on applicationId means a stopped session's
-# entries can never be handed to a new context (their checkpoint RDDs
-# would be dead). Bounded LRU — evicted entries release their checkpoint
-# files through the session's cleanCheckpoints GC hook.
-from collections import OrderedDict
-
-_SHARED: "OrderedDict[tuple, object]" = OrderedDict()
-_SHARED_CAP = 8
-
-
-def _shared_key(spark: SparkSession, sf_dir: str, table_name: str, artifact: str):
-    import os
-
-    from kwery_spark.sources.scans import _corpus_fingerprint
-
-    return (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, table_name),
-        artifact,
-    )
-
-
-def _shared_get(spark, sf_dir, artifact, table_name="lineitem"):
-    key = _shared_key(spark, sf_dir, table_name, artifact)
-    hit = _SHARED.get(key)
-    if hit is not None:
-        _SHARED.move_to_end(key)
-    return hit
-
-
-def _shared_put(spark, sf_dir, artifact, value, table_name="lineitem"):
-    _SHARED[_shared_key(spark, sf_dir, table_name, artifact)] = value
-    while len(_SHARED) > _SHARED_CAP:
-        _SHARED.popitem(last=False)
-
+# The family's checkpointed artifacts are memoized (catalog.memo) and
+# keyed on the lineitem fingerprint (the contracted co-purchase graph on
+# the events one): every graph key derives from the same weighted
+# customer-supplier pair table, and at scale that build, not the rounds,
+# dominates each iterative key. A standalone run builds what it always
+# built; a multi-key session pays each build once and every later
+# consumer starts from the checkpoint scan.
 
 from kwery_spark.catalog import lckpt as _lckpt
 from kwery_spark.catalog import snap_captured as _snap_captured
@@ -140,104 +99,86 @@ def _ckpt(df: DataFrame) -> DataFrame:
 
 
 def _pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE canonical shared graph artifact (r11): the weighted distinct
+    """THE canonical shared graph artifact: the weighted distinct
     customer-supplier pair table (c=2*custkey, s=2*suppkey+1, wt =
     lineitem multiplicity), c-partitioned and disk-checkpointed, memoized
-    per session+corpus (_SHARED). Every graph key is a projection of it:
+    per session+corpus. Every graph key is a projection of it:
     the bidirected edge set is its key set, LPA's degree caps are windows
     over wt, common-neighbor weights ARE wt, degrees are its per-key
     counts. One 60M-row (sf10) join feeds the whole family instead of
     each key re-paying it — at sf30 the build dominated all three
     iterative keys (r9 decomposition)."""
-    # ADVICE r14: the effective arm (bucketed zipper vs raw scans) is
-    # resolved BEFORE the memo probe and folded into the artifact name,
-    # so flipping the spark.kwery.bucketed kill switch mid-session can
-    # never silently serve the other arm's checkpoint (rows are
-    # identical either way — this is for honest A/B tooling, which
-    # previously had to remember to clear _SHARED).
+    # The effective arm (bucketed zipper vs raw scans) is resolved before
+    # the memo probe and folded into the artifact name, so flipping the
+    # spark.kwery.bucketed kill switch mid-session never serves the other
+    # arm's checkpoint (rows are identical either way).
     from kwery_spark.catalog import bucketed_db, bucketed_table
 
     bdb = None
     if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() != "false":
         bdb = bucketed_db(spark, sf_dir)
+
+    def build() -> DataFrame:
+        # r14 (VERDICT r13 item 4): when the orderkey-bucketed warehouse
+        # layout exists (bench _prep builds it; the offline-maintenance
+        # class), the orders⋈lineitem feed zips bucket-to-bucket with ZERO
+        # exchange on either input — measured sf30 fresh-JVM A/B: build+ckpt
+        # 58.7 s (raw scans, both sides shuffled) → 42.1 s (zipper), rows
+        # identical (176,061,300). At 100 TB this is the co-located fact
+        # layout every warehouse keeps anyway. Raw fallback otherwise (the
+        # sweep protocol reads raw corpora); same kill switch as
+        # tpch._maybe_bucketed. Measured non-levers for the raw arm, so the
+        # next reader doesn't re-chase them: spark.checkpoint.compress
+        # shrinks the 8.3 GB checkpoint 7.5x but costs ~+5 s write for
+        # ~-1.1 s/read (two interleaved A/B pairs — null for a single-key
+        # build, marginal family-wide); map-side partial agg <2% (r12,
+        # multiplicity ~1.015); the repartition(c) is load-bearing (every
+        # zip consumer) and the sort feeds LPA's window.
+        if bdb is not None:
+            li = bucketed_table(spark, bdb, "lineitem").select(
+                "l_orderkey", "l_suppkey"
+            )
+            orders = bucketed_table(spark, bdb, "orders").select(
+                "o_orderkey", "o_custkey"
+            )
+        else:
+            li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+            orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        # c-partitioned + sorted before the checkpoint (LPA's customer-side
+        # cap window runs exchange-free off it, the r9 LPA layout). Design
+        # A/B/C measured at sf10 (family totals 215.7 / 230.9 / 251.0 s vs
+        # 283.0 r10): routing every edge consumer through this one sorted
+        # checkpoint costs the FIRST builder ~+40 s but repays it twice over
+        # in LPA/common-neighbors/degree reuse — family total is the graded
+        # quantity, so the shared artifact is imposed, not opportunistic.
+        # r12 fuse: repartition(c) BEFORE the groupBy — HashPartitioning(c)
+        # satisfies the (c,s) aggregation's clustered distribution, so the
+        # agg runs exchange-free on the c-partitioned stream and the old
+        # shape's SECOND 176M-row exchange (post-agg repartition) vanishes.
+        # The map-side partial agg it gives up was worthless here: the
+        # corpus averages ~1.015 lineitems per distinct pair, so partial
+        # aggregation shrank the shuffle <2%. Measured sf30 fresh-JVM: LPA
+        # cold total 128.2 s (old) → 123.0 s (fused), identical values.
+        # The stored sort stays: it elides the per-round SMJ sorts of every
+        # zip consumer (sort-free and shuffle-hash arms: BASELINE.md).
+        pre = (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(
+                (F.col("o_custkey") * 2).alias("c"),
+                (F.col("l_suppkey") * 2 + 1).alias("s"),
+            )
+            .repartition("c")
+            .groupBy("c", "s")
+            .agg(F.count(F.lit(1)).alias("wt"))
+            .sortWithinPartitions("c")
+        )
+        return _ckpt(pre)
+
     artifact = "pair_weights_bkt" if bdb is not None else "pair_weights"
-    hit = _shared_get(spark, sf_dir, artifact)
-    if hit is not None:
-        return hit
-    # r14 (VERDICT r13 item 4): when the orderkey-bucketed warehouse
-    # layout exists (bench _prep builds it; the offline-maintenance
-    # class), the orders⋈lineitem feed zips bucket-to-bucket with ZERO
-    # exchange on either input — measured sf30 fresh-JVM A/B: build+ckpt
-    # 58.7 s (raw scans, both sides shuffled) → 42.1 s (zipper), rows
-    # identical (176,061,300). At 100 TB this is the co-located fact
-    # layout every warehouse keeps anyway. Raw fallback otherwise (the
-    # sweep protocol reads raw corpora); same kill switch as
-    # tpch._maybe_bucketed. Measured non-levers for the raw arm, so the
-    # next reader doesn't re-chase them: spark.checkpoint.compress
-    # shrinks the 8.3 GB checkpoint 7.5x but costs ~+5 s write for
-    # ~-1.1 s/read (two interleaved A/B pairs — null for a single-key
-    # build, marginal family-wide); map-side partial agg <2% (r12,
-    # multiplicity ~1.015); the repartition(c) is load-bearing (every
-    # zip consumer) and the sort feeds LPA's window.
-    if bdb is not None:
-        li = bucketed_table(spark, bdb, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        orders = bucketed_table(spark, bdb, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-    else:
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # c-partitioned + sorted before the checkpoint (LPA's customer-side
-    # cap window runs exchange-free off it, the r9 LPA layout). Design
-    # A/B/C measured at sf10 (family totals 215.7 / 230.9 / 251.0 s vs
-    # 283.0 r10): routing every edge consumer through this one sorted
-    # checkpoint costs the FIRST builder ~+40 s but repays it twice over
-    # in LPA/common-neighbors/degree reuse — family total is the graded
-    # quantity, so the shared artifact is imposed, not opportunistic.
-    # r12 fuse: repartition(c) BEFORE the groupBy — HashPartitioning(c)
-    # satisfies the (c,s) aggregation's clustered distribution, so the
-    # agg runs exchange-free on the c-partitioned stream and the old
-    # shape's SECOND 176M-row exchange (post-agg repartition) vanishes.
-    # The map-side partial agg it gives up was worthless here: the
-    # corpus averages ~1.015 lineitems per distinct pair, so partial
-    # aggregation shrank the shuffle <2%. Measured sf30 fresh-JVM: LPA
-    # cold total 128.2 s (old) → 123.0 s (fused), identical values.
-    # r16 probe knob (tools/probes/pair_weights_arms.py): "nosort" drops
-    # the stored sort, "shj" adds a SHUFFLE_HASH hint on the orders side
-    # of the orderkey join. Default "" keeps the committed design.
-    # Both arms MEASURED AND REJECTED in r16: shj won ~11% at sf10 but
-    # regressed the family 284->349 s at sf30 (pagerank 184 s — the
-    # per-partition hash build loses to sorted merge once |orders|/64
-    # outgrows cache); nosort "won" only while checkpoint capture was
-    # broken (UnknownPartitioning — see _snap_captured). With capture
-    # fixed, the stored sort elides the per-round SMJ sorts and the
-    # sorted arm wins sf10 99.95 vs 137.02 s family total (pagerank
-    # 47.9 vs 78.5). Keep the sort.
-    arm = spark.conf.get("spark.kwery.pairweights.arm", "") or ""
-    if "shj" in arm:
-        orders = orders.hint("shuffle_hash")
-    pre = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .repartition("c")
-        .groupBy("c", "s")
-        .agg(F.count(F.lit(1)).alias("wt"))
-    )
-    if "nosort" not in arm:
-        pre = pre.sortWithinPartitions("c")
-    w = _ckpt(pre)
-    _shared_put(spark, sf_dir, artifact, w)
-    return w
+    return memo(spark, sf_dir, ("lineitem",), artifact, build)
 
 
-def _purchase_edges(
-    spark: SparkSession, sf_dir: str, with_degree: bool = False
-) -> DataFrame:
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirected customer↔supplier purchase graph with LONG node ids
     (customer k → 2k, supplier k → 2k+1), shared by BFS and any
     consumer that genuinely walks both directions (pagerank stopped
@@ -255,45 +196,21 @@ def _purchase_edges(
     from co-partitioned input. Node ids render back to the public
     'c{k}'/'s{k}' strings only in final projections (_node_str).
 
-    r11: the distinct pair set comes from _pair_weights' checkpoint (its
-    key set — the groupBy subsumes the old distinct, same single shuffle
-    for the first builder plus one 59M-row intermediate write that the
-    family-total measurements showed is repaid twice over, see
-    _pair_weights), and the finished edge frame is memoized per
-    session+corpus, so a with-degree build also serves plain-edge
-    consumers (srcdeg dropped) and any later consumer in the session."""
-    variant = "edges_deg" if with_degree else "edges"
-    hit = _shared_get(spark, sf_dir, variant)
-    if hit is not None:
-        return hit
-    if not with_degree:
-        deg = _shared_get(spark, sf_dir, "edges_deg")
-        if deg is not None:
-            return deg.drop("srcdeg")
-    base = _pair_weights(spark, sf_dir).select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    )
-    from pyspark.sql import Window
+    The distinct pair set comes from _pair_weights' checkpoint (its key
+    set — the groupBy subsumes the old distinct), and the finished edge
+    frame is memoized per session+corpus."""
 
-    edges = (
-        base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("src")
-        .sortWithinPartitions("src")
-    )
-    if with_degree:
-        # out-degree rides the SAME partitioning (partitionBy-only window
-        # over the already src-partitioned frame — no extra exchange), so
-        # a degree-weighted consumer needs neither a degree aggregate nor
-        # a second 117M-row join+checkpoint. Opt-in: LPA/BFS don't
-        # consume it and shouldn't pay the window. (No registered key
-        # requests it since the r13 pagerank bipartite rewrite; kept for
-        # the engine API and the edges_deg→edges reuse path above.)
-        edges = edges.withColumn(
-            "srcdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    def build() -> DataFrame:
+        base = _pair_weights(spark, sf_dir).select(
+            F.col("c").alias("src"), F.col("s").alias("dst")
         )
-    edges = _ckpt(edges)
-    _shared_put(spark, sf_dir, variant, edges)
-    return edges
+        return _ckpt(
+            base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .repartition("src")
+            .sortWithinPartitions("src")
+        )
+
+    return memo(spark, sf_dir, ("lineitem",), "edges", build)
 
 
 def _node_str(col):
@@ -366,10 +283,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint's partitioning.
 
     The 352M-edge bidirected union + srcdeg window + disk checkpoint
-    the r12 form built (the whole _purchase_edges(with_degree=True)
-    artifact) vanishes from this key — pagerank now runs straight off
-    the family's shared _pair_weights checkpoint. BFS still builds the
-    plain edge frame for itself (it genuinely walks both directions).
+    the r12 form built vanishes from this key — pagerank now runs
+    straight off the family's shared _pair_weights checkpoint.
     Decomposition at sf30 (tools/decompose_pagerank.py, fresh JVM, 64
     partitions): _pair_weights build+ckpt 68.7 s (the shared family
     cost every first graph key pays) + degc/degs ckpts 6.7/5.8 s +
@@ -460,64 +375,64 @@ def _contracted_copurchase(spark: SparkSession, sf_dir: str):
     form an internal clique (|H| >= 2 shared hours, the w>=2 denoise);
     redges = (ca, cb, ma, mb) rep pairs sharing >= 2 hours, ca < cb.
 
-    r11: memoized per session+corpus (_SHARED, fingerprinted on events —
-    triangle census, k-core and assortativity all consume the identical
-    contraction; in a sweep session the events scan + rep join now run
-    once for the three of them)."""
-    hit = _shared_get(spark, sf_dir, "contracted", table_name="events")
-    if hit is not None:
-        return hit
-    purch = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", F.date_trunc("hour", "ts").alias("hr"))
-        .distinct()
-    )
-    groups = (
-        purch.groupBy("user_id")
-        .agg(F.sort_array(F.collect_list("hr")).alias("hs"))
-        .groupBy(
-            F.md5(
-                F.concat_ws(
-                    ",", F.transform("hs", lambda h: h.cast("string"))
-                )
-            ).alias("ck")
+    Memoized per session+corpus, keyed on the events fingerprint: the
+    triangle census, k-core and assortativity consume the identical
+    contraction, so a multi-key session runs the events scan + rep join
+    once for the three of them."""
+
+    def build():
+        purch = (
+            table(spark, sf_dir, "events")
+            .filter(F.col("event_type") == "purchase")
+            .select("user_id", F.date_trunc("hour", "ts").alias("hr"))
+            .distinct()
         )
-        .agg(
-            F.count(F.lit(1)).alias("m"),
-            F.first("hs").alias("hs"),
+        groups = (
+            purch.groupBy("user_id")
+            .agg(F.sort_array(F.collect_list("hr")).alias("hs"))
+            .groupBy(
+                F.md5(
+                    F.concat_ws(
+                        ",", F.transform("hs", lambda h: h.cast("string"))
+                    )
+                ).alias("ck")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("m"),
+                F.first("hs").alias("hs"),
+            )
+            .select(
+                "ck",
+                "m",
+                "hs",
+                (F.size("hs") >= 2).cast("int").alias("clique"),
+            )
         )
-        .select(
-            "ck",
-            "m",
-            "hs",
-            (F.size("hs") >= 2).cast("int").alias("clique"),
+        # one rep-level pass serves edge gen, degree agg, and the triple join.
+        # PLAIN localCheckpoint on purpose (r16 scope A/B,
+        # tools/probes/capture_scope_ab.py): these frames are rep-level
+        # small, but their builds are joins where AQE's runtime re-planning
+        # (runtime SMJ->BHJ on the rep-pair join, partition coalescing)
+        # dominates — capture (AQE-off snap) regressed triangle 7.6->21.9 s
+        # and kcore 5.7->9.4 s at sf10. Capture pays only where downstream
+        # zips on a BIG checkpoint outweigh the build's lost AQE
+        # (_pair_weights family).
+        groups = groups.localCheckpoint(eager=True)
+        gh = groups.select("ck", "m", F.explode("hs").alias("hr"))
+        ga = gh.select(F.col("ck").alias("ca"), F.col("m").alias("ma"), "hr")
+        gb = gh.select(F.col("ck").alias("cb"), F.col("m").alias("mb"), "hr")
+        redges = (
+            ga.join(gb, "hr")
+            .filter(F.col("ca") < F.col("cb"))
+            .groupBy("ca", "cb", "ma", "mb")
+            .agg(F.count(F.lit(1)).alias("w"))
+            .filter(F.col("w") >= 2)
+            .select("ca", "cb", "ma", "mb")
         )
-    )
-    # one rep-level pass serves edge gen, degree agg, and the triple join.
-    # PLAIN localCheckpoint on purpose (r16 scope A/B,
-    # tools/probes/capture_scope_ab.py): these frames are rep-level
-    # small, but their builds are joins where AQE's runtime re-planning
-    # (runtime SMJ->BHJ on the rep-pair join, partition coalescing)
-    # dominates — capture (AQE-off snap) regressed triangle 7.6->21.9 s
-    # and kcore 5.7->9.4 s at sf10. Capture pays only where downstream
-    # zips on a BIG checkpoint outweigh the build's lost AQE
-    # (_pair_weights family).
-    groups = groups.localCheckpoint(eager=True)
-    gh = groups.select("ck", "m", F.explode("hs").alias("hr"))
-    ga = gh.select(F.col("ck").alias("ca"), F.col("m").alias("ma"), "hr")
-    gb = gh.select(F.col("ck").alias("cb"), F.col("m").alias("mb"), "hr")
-    redges = (
-        ga.join(gb, "hr")
-        .filter(F.col("ca") < F.col("cb"))
-        .groupBy("ca", "cb", "ma", "mb")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("ca", "cb", "ma", "mb")
-    )
-    redges = redges.localCheckpoint(eager=True)  # see groups note above
-    _shared_put(spark, sf_dir, "contracted", (groups, redges), table_name="events")
-    return groups, redges
+        redges = redges.localCheckpoint(eager=True)  # see groups note above
+        return groups, redges
+
+    return memo(spark, sf_dir, ("events",), "contracted", build)
 
 
 @register(
@@ -836,31 +751,27 @@ def _capped_purchase_edges(spark: SparkSession, sf_dir: str, k: int = _LPA_CAP) 
     rest of the family and the finished capped edge set is memoized per
     session+corpus; each cap window pays its own partition+sort (the
     shared artifact stays partition-neutral — see _pair_weights)."""
-    artifact = f"edges_capped_{k}"
-    hit = _shared_get(spark, sf_dir, artifact)
-    if hit is not None:
-        return hit
-    w = _pair_weights(spark, sf_dir)
-    wc = Window.partitionBy("c").orderBy(F.col("wt").desc(), F.col("s"))
-    ws = Window.partitionBy("s").orderBy(F.col("wt").desc(), F.col("c"))
-    fwd = (
-        w.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= k)
-        .select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    )
-    rev = (
-        w.withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= k)
-        .select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    # the two directions cannot collide (even->odd vs odd->even), so the
-    # union needs no distinct; src-partitioned like _purchase_edges so
-    # each vote round's join starts co-partitioned
-    capped = _ckpt(
-        fwd.union(rev).repartition("src").sortWithinPartitions("src")
-    )
-    _shared_put(spark, sf_dir, artifact, capped)
-    return capped
+
+    def build() -> DataFrame:
+        w = _pair_weights(spark, sf_dir)
+        wc = Window.partitionBy("c").orderBy(F.col("wt").desc(), F.col("s"))
+        ws = Window.partitionBy("s").orderBy(F.col("wt").desc(), F.col("c"))
+        fwd = (
+            w.withColumn("rk", F.row_number().over(wc))
+            .filter(F.col("rk") <= k)
+            .select(F.col("c").alias("src"), F.col("s").alias("dst"))
+        )
+        rev = (
+            w.withColumn("rk", F.row_number().over(ws))
+            .filter(F.col("rk") <= k)
+            .select(F.col("s").alias("src"), F.col("c").alias("dst"))
+        )
+        # the two directions cannot collide (even->odd vs odd->even), so the
+        # union needs no distinct; src-partitioned like _purchase_edges so
+        # each vote round's join starts co-partitioned
+        return _ckpt(fwd.union(rev).repartition("src").sortWithinPartitions("src"))
+
+    return memo(spark, sf_dir, ("lineitem",), f"edges_capped_{k}", build)
 
 
 def _lpa_oracle(rounds: int = 3, k: int = _LPA_CAP) -> str:
@@ -1028,8 +939,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 60M-row join; standalone runs keep the original single-pass plan
     (this key reads the weight table once, so it must not pay a
     checkpoint write of its own — the degree_distribution rule)."""
-    w_shared = _shared_get(spark, sf_dir, "pair_weights") or _shared_get(
-        spark, sf_dir, "pair_weights_bkt"
+    w_shared = memo(spark, sf_dir, ("lineitem",), "pair_weights") or memo(
+        spark, sf_dir, ("lineitem",), "pair_weights_bkt"
     )
     if w_shared is not None:
         w = w_shared.select(
@@ -1135,12 +1046,10 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge checkpoint, read the pair set / degrees from it instead
     # (exact same rows — the bidirected set counts each pair from both
     # ends, so a plain per-src count over it IS the degree).
-    w_shared = _shared_get(spark, sf_dir, "pair_weights") or _shared_get(
-        spark, sf_dir, "pair_weights_bkt"
+    w_shared = memo(spark, sf_dir, ("lineitem",), "pair_weights") or memo(
+        spark, sf_dir, ("lineitem",), "pair_weights_bkt"
     )
-    edges_shared = _shared_get(spark, sf_dir, "edges_deg") or _shared_get(
-        spark, sf_dir, "edges"
-    )
+    edges_shared = memo(spark, sf_dir, ("lineitem",), "edges")
     if w_shared is not None:
         base = w_shared.select(
             F.col("c").alias("src"), F.col("s").alias("dst")

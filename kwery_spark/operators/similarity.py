@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import round6, table
+from kwery_spark.catalog import memo, round6, table
 from kwery_spark.registry import register
 
 
@@ -34,98 +34,69 @@ def _vecs(spark: SparkSession, sf_dir: str, alias_v: str = "v") -> DataFrame:
     )
 
 
-# r14 contraction gate (VERDICT r13 item 3 / what's-wrong #4): the r13
-# distinct-vector contraction (k-means iterations, PQ/IVFPQ encodes run
-# over DISTINCT vectors with multiplicity weights) is a pure win only on
-# clone-heavy corpora — THIS corpus' upscale clones embeddings verbatim
-# (sf30: 600k rows / 2k distinct), but on a mostly-distinct real corpus
-# the contraction's groupBy(v) degenerates to a full shuffle keyed on
-# the 64-double vector with ~zero reduction, roughly doubling fit-stage
-# data movement. Gate: measured clone factor = footer rows /
-# approx-distinct(vector), memoized per (session, corpus) — one bounded
-# single-scalar aggregate job on first use, the same sanctioned
-# plan-time-probe class as the q16 pmap gate and the nation memo.
-# Threshold 2.0: the contraction pays one vector-keyed shuffle plus a
-# re-attach join; it earns them only when it at least HALVES every
-# downstream expansion (xk assignment, xMxK encode, per-round update).
-# Both arms are value-identical (same addend multisets; equivalence
-# locked by tests/test_r14_ops.py at sf0.01 under the conf override).
-# ``spark.kwery.contract`` = on|off|auto (default auto) forces an arm —
-# the tests' escape hatch, and an operator knob for corpora with known
-# clone structure.
-# ADVICE r14 (documented, behavior unchanged): the estimate side of the
-# comparison is an HLL approx_count_distinct (~2% relative error), so on
-# a corpus whose TRUE clone factor sits within ~±2% of 2.0 the chosen
-# arm depends on HLL hash behavior, not the prescription. That band is
-# performance-only (both arms are value-identical, locked below) and
-# deterministic per corpus (same bytes -> same HLL sketch -> same arm
-# across sessions); corpora with near-threshold clone structure should
-# pin ``spark.kwery.contract`` explicitly rather than rely on the gate.
+# Distinct-content contraction gate, shared by the vector family here
+# (k-means iterations, PQ/IVFPQ encodes over DISTINCT vectors with
+# multiplicity weights) and the text family (text.py: tfidf, rake, pmi
+# over distinct texts). Contraction is a pure win only on clone-heavy
+# corpora — THIS corpus' upscale clones embeddings and texts verbatim
+# (sf30: 600k rows / 2k distinct vectors; sf10: 500k docs / 4,992
+# distinct texts), but on a mostly-distinct real corpus the
+# contraction's groupBy(content) degenerates to a full shuffle with ~zero
+# reduction, roughly doubling data movement. Gate: measured clone
+# factor = footer rows / approx-distinct(content), one bounded
+# single-scalar aggregate job per session and corpus — the same
+# sanctioned plan-time-probe class as the q16 pmap gate and the nation
+# memo. Threshold 2.0: the contraction pays one content-keyed shuffle
+# plus a re-attach join; it earns them only when it at least HALVES
+# every downstream expansion. Both arms are value-identical (same addend
+# multisets; locked by tests/test_r14_ops.py and tests/test_r15_ops.py
+# under the conf override). ``spark.kwery.contract`` = on|off|auto
+# (default auto) forces an arm — the tests' escape hatch, and an
+# operator knob for corpora with known clone structure.
+# The estimate is an HLL approx_count_distinct (~2% relative error), so
+# on a corpus whose TRUE clone factor sits within ~±2% of 2.0 the chosen
+# arm depends on HLL hash behavior. That band is performance-only and
+# deterministic per corpus (same bytes -> same sketch -> same arm);
+# corpora with near-threshold clone structure should pin
+# ``spark.kwery.contract`` explicitly.
 CONTRACT_MIN_CLONE = 2.0
-_CLONE_MEMO: dict[tuple, float] = {}
+
+# The content column whose distinct values a contracted arm runs over.
+_CLONE_CONTENT = {
+    "embeddings": lambda: F.transform("embedding", lambda x: x.cast("double")),
+    "documents": lambda: F.col("text"),
+}
 
 
-def _clone_factor(spark: SparkSession, sf_dir: str) -> float:
-    """rows / approx-distinct of the embedding vector, >= 1.0."""
-    import os as _os
-
+def _clone_factor(spark: SparkSession, sf_dir: str, name: str) -> float:
+    """rows / approx-distinct of table ``name``'s content column, >= 1.0."""
     from kwery_spark.catalog import parquet_rows
-    from kwery_spark.sources.scans import _corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "embeddings"),
-    )
-    hit = _CLONE_MEMO.get(key)
-    if hit is None:
-        rows = parquet_rows(sf_dir, "embeddings")
-        nd = (
-            _vecs(spark, sf_dir)
-            .agg(F.approx_count_distinct(F.xxhash64("v")).alias("nd"))
-            .first()[0]
-        )
-        hit = rows / max(1, nd)
-        _CLONE_MEMO[key] = hit
-        while len(_CLONE_MEMO) > 8:
-            _CLONE_MEMO.pop(next(iter(_CLONE_MEMO)))
-    return hit
+    def build() -> float:
+        content = F.xxhash64(_CLONE_CONTENT[name]())
+        nd = table(spark, sf_dir, name).agg(F.approx_count_distinct(content)).first()[0]
+        return parquet_rows(sf_dir, name) / max(1, nd)
+
+    return memo(spark, sf_dir, (name,), "clone_factor", build)
 
 
-def _use_contraction(spark: SparkSession, sf_dir: str) -> bool:
+def _use_contraction(spark: SparkSession, sf_dir: str, name: str) -> bool:
     mode = (spark.conf.get("spark.kwery.contract", "auto") or "auto").lower()
     if mode == "on":
         return True
     if mode == "off":
         return False
-    return _clone_factor(spark, sf_dir) >= CONTRACT_MIN_CLONE
-
-
-# Memoized query vectors (r14): a k-NN query vector is a bounded 1-row
-# primary-key lookup (64 doubles) — the same sanctioned bounded-scalar
-# collect class as tpch._NATION_MEMO, keyed on (applicationId, corpus
-# path, embeddings fingerprint) so a regenerated corpus or new session
-# can never be served a stale vector. The value is a tuple of floats,
-# never a DataFrame (the stage-skipping trap does not apply to
-# plan-time literals).
-_QVEC_MEMO: dict[tuple, tuple] = {}
+    return _clone_factor(spark, sf_dir, name) >= CONTRACT_MIN_CLONE
 
 
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> tuple:
     """The embedding of ``vec_id`` as plain Python floats, collected once
-    per (session, corpus)."""
-    import os as _os
+    per (session, corpus): a bounded 1-row primary-key lookup, the same
+    sanctioned bounded-scalar collect class as tpch._nation_rows. The
+    value is a tuple of floats, never a DataFrame (the stage-skipping
+    trap does not apply to plan-time literals)."""
 
-    from kwery_spark.sources.scans import _corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "embeddings"),
-        vec_id,
-    )
-    hit = _QVEC_MEMO.get(key)
-    if hit is None:
+    def build() -> tuple:
         rows = (
             _vecs(spark, sf_dir)
             .filter(F.col("vec_id") == vec_id)
@@ -137,11 +108,9 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> tuple:
                 f"_query_vec: no embedding with vec_id={vec_id} in "
                 f"{sf_dir}/embeddings.parquet — corpus layout drift?"
             )
-        hit = tuple(float(x) for x in rows[0].v)
-        _QVEC_MEMO[key] = hit
-        while len(_QVEC_MEMO) > 8:
-            _QVEC_MEMO.pop(next(iter(_QVEC_MEMO)))
-    return hit
+        return tuple(float(x) for x in rows[0].v)
+
+    return memo(spark, sf_dir, ("embeddings",), f"query_vec_{vec_id}", build)
 
 
 def dot(a, b):
@@ -628,7 +597,7 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 5):
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
         .localCheckpoint(eager=True)
     )
-    if _use_contraction(spark, sf_dir):
+    if _use_contraction(spark, sf_dir, "embeddings"):
         key = "v"
         dvecs = (
             vecs.groupBy("v")
@@ -969,7 +938,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors stay in cold storage."""
     M, K, SUB = 8, 16, 8
     vecs = _vecs(spark, sf_dir)
-    contracted = _use_contraction(spark, sf_dir)
+    contracted = _use_contraction(spark, sf_dir, "embeddings")
     kc = "v" if contracted else "vec_id"
     dv = vecs.select("v").distinct() if contracted else vecs.select("vec_id", "v")
     ms = F.explode(F.sequence(F.lit(0), F.lit(M - 1))).alias("m")
@@ -1193,7 +1162,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping the distinct shuffle and both re-attach joins."""
     M, K, SUB, NPROBE = 8, 16, 8, 4
     vecs = _vecs(spark, sf_dir)
-    contracted = _use_contraction(spark, sf_dir)  # r14 clone-factor gate
+    contracted = _use_contraction(spark, sf_dir, "embeddings")  # r14 clone-factor gate
     kc = "v" if contracted else "vec_id"
     dv = vecs.select("v").distinct() if contracted else vecs.select("vec_id", "v")
     seeds = vecs.filter(F.col("vec_id") < 8).select(

@@ -12,7 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from kwery_spark.catalog import round6, table
+from kwery_spark.catalog import memo, round6, table
+from kwery_spark.operators.similarity import _clone_factor, _use_contraction
 from kwery_spark.registry import register
 
 
@@ -20,105 +21,34 @@ def _tokens(df: DataFrame):
     return F.split(F.lower(F.col("text")), " ")
 
 
-# r15 distinct-text contraction gate — the similarity.py clone-factor
-# doctrine (CONTRACT_MIN_CLONE) applied to ``documents.text``: the
-# gen_sf1 upscale clones text verbatim (sf10: 500k rows / 4,992 distinct
-# texts, clone factor ~100), so any text-derived aggregate is
-# content-bounded at ~1/clone of the row count. The contraction pays one
-# text-keyed shuffle (map-side partial agg collapses clones before the
-# exchange) and earns it only when it at least HALVES every downstream
-# explode/aggregate — same 2.0 threshold, same ``spark.kwery.contract``
-# on|off|auto knob (the tests' escape hatch), same memoized
-# single-scalar HLL probe class as similarity._clone_factor. On the
-# original corpus (sf0.001-0.1, clone ~1.0) the gate keeps the raw arm,
-# so driver oracle samples grade the raw plans and .data/sfN checks
-# grade the contracted ones.
-_TEXT_CLONE_MEMO: dict[tuple, float] = {}
-
-
-def _text_clone_factor(spark: SparkSession, sf_dir: str) -> float:
-    """documents rows / approx-distinct(text), >= 1.0."""
-    import os as _os
-
-    from kwery_spark.catalog import parquet_rows
-    from kwery_spark.sources.scans import _corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "documents"),
-    )
-    hit = _TEXT_CLONE_MEMO.get(key)
-    if hit is None:
-        rows = parquet_rows(sf_dir, "documents")
-        nd = (
-            table(spark, sf_dir, "documents")
-            .agg(F.approx_count_distinct(F.xxhash64("text")).alias("nd"))
-            .first()[0]
-        )
-        hit = rows / max(1, nd)
-        _TEXT_CLONE_MEMO[key] = hit
-        while len(_TEXT_CLONE_MEMO) > 8:
-            _TEXT_CLONE_MEMO.pop(next(iter(_TEXT_CLONE_MEMO)))
-    return hit
-
-
-def _use_text_contraction(spark: SparkSession, sf_dir: str) -> bool:
-    mode = (spark.conf.get("spark.kwery.contract", "auto") or "auto").lower()
-    if mode == "on":
-        return True
-    if mode == "off":
-        return False
-    from kwery_spark.operators.similarity import CONTRACT_MIN_CLONE
-
-    return _text_clone_factor(spark, sf_dir) >= CONTRACT_MIN_CLONE
-
-
-_CONTRACTED_MEMO: dict[tuple, DataFrame] = {}
+# The distinct-content contraction gate (similarity._use_contraction)
+# applies to ``documents.text``: any text-derived aggregate is
+# content-bounded at ~1/clone of the row count. On the original corpus
+# (sf0.001-0.1, clone ~1.0) the gate keeps the raw arm, so driver oracle
+# samples grade the raw plans and .data/sfN checks grade the contracted
+# ones.
 
 
 def _contracted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-text frame with multiplicity ``m``, eagerly checkpointed:
-    |distinct texts| rows, partitioned by text — downstream
-    groupBy(text, ...) consumers ride this partitioning exchange-free
-    (HashPartitioning(text) satisfies any clustering it prefixes).
+    |distinct texts| rows. Memoized per session+corpus: text_tfidf,
+    text_rake_keywords and text_pmi_cooccurrence share one entry, so a
+    multi-key session pays the corpus-wide text shuffle once."""
 
-    r16 (ADVICE r15): memoized per (applicationId, corpus, fingerprint)
-    like _TEXT_CLONE_MEMO / graph._SHARED — a sweep session running
-    text_tfidf, text_rake_keywords and text_pmi_cooccurrence previously
-    paid the corpus-wide text shuffle once per key. The doc_id list
-    variant is gone (tfidf's r16 join-back re-expansion), so all three
-    consumers share ONE memo entry. Hit==cold equality locked in
-    test_r16_ops."""
-    import os as _os
+    def build() -> DataFrame:
+        # PLAIN localCheckpoint on purpose (r16): capture (catalog.lckpt,
+        # the AQE-off snap) was tried here and REGRESSED the trio — tfidf
+        # 3.29->3.68 s, rake 1.69->3.77 s, pmi 3.52->4.42 s at sf10
+        # (tools/probes/capture_scope_ab.py) — the contracted frame is
+        # |distinct texts| small, so the re-exchange it saves downstream
+        # is cheaper than what the corpus-wide groupBy(text) build loses
+        # without AQE.
+        docs = table(spark, sf_dir, "documents")
+        return docs.groupBy("text").agg(F.count(F.lit(1)).alias("m")).localCheckpoint(
+            eager=True
+        )
 
-    from kwery_spark.sources.scans import _corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "documents"),
-    )
-    hit = _CONTRACTED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    docs = table(spark, sf_dir, "documents")
-    # PLAIN localCheckpoint on purpose (r16): capture (catalog.lckpt,
-    # the AQE-off snap) was tried here and REGRESSED the trio — tfidf
-    # 3.29->3.68 s, rake 1.69->3.77 s, pmi 3.52->4.42 s at sf10
-    # (tools/probes/capture_scope_ab.py) — the contracted frame is
-    # |distinct texts| small, so the re-exchange it saves downstream is
-    # cheaper than what the corpus-wide groupBy(text) build loses
-    # without AQE. The "consumers ride this partitioning exchange-free"
-    # wording in older notes was fiction under AQE either way
-    # (UnknownPartitioning — see catalog.snap_captured).
-    out = docs.groupBy("text").agg(F.count(F.lit(1)).alias("m")).localCheckpoint(
-        eager=True
-    )
-    _CONTRACTED_MEMO[key] = out
-    while len(_CONTRACTED_MEMO) > 4:
-        _CONTRACTED_MEMO.pop(next(iter(_CONTRACTED_MEMO)))
-    return out
+    return memo(spark, sf_dir, ("documents",), "contracted_docs", build)
 
 
 @register(
@@ -170,7 +100,7 @@ def text_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF: top-scoring term per document. idf = ln(N/df).
 
-    r15: gated distinct-text contraction (``_use_text_contraction``). A
+    r15: gated distinct-text contraction (``similarity._use_contraction``). A
     document's top term depends only on its text (given global N and the
     df table), and df/N decompose exactly over distinct texts weighted
     by multiplicity (df = Σ m over distinct texts containing the token —
@@ -195,7 +125,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners side broadcasts under the memoized HLL distinct-text
     estimate (no extra job; plain shuffle join past the bound)."""
     docs = table(spark, sf_dir, "documents")
-    if _use_text_contraction(spark, sf_dir):
+    if _use_contraction(spark, sf_dir, "documents"):
         contr = _contracted_docs(spark, sf_dir)
         tf = (
             contr.select("text", "m", F.explode(_tokens(contr)).alias("token"))
@@ -228,8 +158,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from kwery_spark.catalog import parquet_rows
 
-        nd_est = parquet_rows(sf_dir, "documents") / _text_clone_factor(
-            spark, sf_dir
+        nd_est = parquet_rows(sf_dir, "documents") / _clone_factor(
+            spark, sf_dir, "documents"
         )
         if nd_est <= 500_000:  # ~60 B/row winners frame ≤ ~30 MB built
             top = F.broadcast(top)
@@ -1071,14 +1001,14 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNCONDITIONAL (never worse: the word explode shrinks from
     all-instances to distinct-phrases and a full scan+regex pass
     disappears on any corpus). Under the r15 text clone gate
-    (``_use_text_contraction``), the scan side additionally contracts
+    (``similarity._use_contraction``), the scan side additionally contracts
     to distinct texts first — the regex split runs once per distinct
     text, weighted by multiplicity. Fresh-session A/B at sf10
     (tools/probes/text_contract_decomp.py): 38.8 s (old two-pass) →
     6.09 s (phrase contraction) → 1.48 s (with text contraction), top-15
     identical on all three arms. The word table stays vocabulary-sized
     (AQE broadcasts it); nothing quadratic, no Python on the data path."""
-    if _use_text_contraction(spark, sf_dir):
+    if _use_contraction(spark, sf_dir, "documents"):
         base = _contracted_docs(spark, sf_dir).select(
             "m",
             F.explode(
@@ -1183,7 +1113,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts, one ln of a single ratio, round 6, full ordering
     tiebreak.
 
-    r15: gated distinct-text contraction (``_use_text_contraction``).
+    r15: gated distinct-text contraction (``similarity._use_contraction``).
     Document-level presence depends only on text: df = Σ m over
     distinct texts containing the word, dab = Σ m over distinct texts
     containing both, N = Σ m — doc_ids are distinct rows, so the
@@ -1194,7 +1124,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B at sf10 (tools/probes/text_contract_decomp.py): 19.75 →
     2.92 s (-85%), top-30 identical. Raw arm unchanged below the gate."""
     docs = table(spark, sf_dir, "documents")
-    if _use_text_contraction(spark, sf_dir):
+    if _use_contraction(spark, sf_dir, "documents"):
         contr = _contracted_docs(spark, sf_dir)
         ctw = (
             contr.select("text", "m", F.explode(F.split("text", " ")).alias("word"))

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, stats_db, table
+from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, memo, stats_db, table
 from kwery_spark.registry import register
 
 
@@ -32,38 +32,18 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> str | None:
     return bucketed_db(spark, sf_dir)
 
 
-# Memoized spec-constant key lists (r12). The ASIA nation-key collect is
-# the r7-sanctioned bounded-scalar collect (25-row spec-constant table),
-# but re-collecting it on every query build costs 2-3 driver jobs —
-# ~0.2 s of the ~1.0 s sf10 q5 run was asia_keys + the nation/region
-# footer reads (job census: 9 jobs/run, 3 of them this). Same memo
-# discipline as graph._SHARED: keyed on (applicationId, resolved corpus,
-# nation+region file fingerprints) so a regenerated corpus or a new
-# session can never be served a stale list; the value is ≤25 ints, never
-# a DataFrame (the stage-skipping trap does not apply to plan-time
-# literals).
-_NATION_MEMO: dict[tuple, tuple] = {}
-
-
-def _nation_rows(spark: SparkSession, sf_dir: str) -> list:
+def _nation_rows(spark: SparkSession, sf_dir: str) -> tuple:
     """The 25 nation rows + the ASIA region key set, collected ONCE per
     (session, corpus). Returns (rows, asia_region_keys) where rows are
-    (n_nationkey, n_name, n_regionkey) tuples sorted by key."""
-    import os
+    (n_nationkey, n_name, n_regionkey) tuples sorted by key.
 
-    from kwery_spark.sources.scans import _corpus_fingerprint
+    Memoized because re-collecting the spec-constant tables on every
+    query build costs 2-3 driver jobs; the value is ≤25 ints, never a
+    DataFrame (the stage-skipping trap does not apply to plan-time
+    literals). Keyed on BOTH files: the ASIA keys come from region, so a
+    region-file change with an unchanged nation file must also miss."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        # BOTH source files: the memoized value includes the ASIA region
-        # keys collected from region, so a region-file change with an
-        # unchanged nation fingerprint must also miss (ADVICE r12)
-        _corpus_fingerprint(sf_dir, "nation"),
-        _corpus_fingerprint(sf_dir, "region"),
-    )
-    hit = _NATION_MEMO.get(key)
-    if hit is None:
+    def build() -> tuple:
         rows = tuple(
             sorted(
                 (r.n_nationkey, r.n_name, r.n_regionkey)
@@ -81,11 +61,9 @@ def _nation_rows(spark: SparkSession, sf_dir: str) -> list:
                 .collect()
             )
         )
-        hit = (rows, asia)
-        _NATION_MEMO[key] = hit
-        while len(_NATION_MEMO) > 8:
-            _NATION_MEMO.pop(next(iter(_NATION_MEMO)))
-    return hit
+        return rows, asia
+
+    return memo(spark, sf_dir, ("nation", "region"), "nation_rows", build)
 
 
 def _asia_nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:

@@ -1,6 +1,5 @@
-"""Round-11 invariants: the graph family's session-scoped shared-artifact
-cache (kwery_spark/operators/graph.py _SHARED) and the dedup_minhash
-summary contract."""
+"""Round-11 invariants: the dedup_minhash summary contract and the
+r11 operator rewrites."""
 
 import pytest
 
@@ -11,66 +10,6 @@ from kwery_spark.registry import QUERIES
 @pytest.fixture(scope="module")
 def sf001():
     return "/root/testdata/sf0.001"
-
-
-def _clear_shared():
-    from kwery_spark.operators import graph
-
-    graph._SHARED.clear()
-
-
-def test_graph_shared_cache_hit_equals_cold(spark, sf001):
-    """Every cached-artifact consumer must return byte-identical rows on
-    the hit path and the cold path (the r11 amortization must be a pure
-    physical change)."""
-    for key in (
-        "graph_degree_distribution",
-        "graph_common_neighbors",
-        "graph_shortest_path",
-    ):
-        _clear_shared()
-        cold = sorted(map(tuple, QUERIES[key](spark, sf001).collect()))
-        _clear_shared()
-        from kwery_spark.operators.graph import _pair_weights, _purchase_edges
-
-        _pair_weights(spark, sf001)
-        _purchase_edges(spark, sf001, with_degree=True)
-        hot = sorted(map(tuple, QUERIES[key](spark, sf001).collect()))
-        assert cold == hot, key
-    _clear_shared()
-
-
-def test_graph_shared_cache_is_corpus_keyed(spark, sf001):
-    """A cached artifact must never serve a different corpus dir — the
-    key embeds the resolved sf_dir and the lineitem fingerprint."""
-    from kwery_spark.operators import graph
-
-    _clear_shared()
-    graph._pair_weights(spark, sf001)
-    # ADVICE r14: the artifact name carries the effective arm (raw vs
-    # bucketed zipper) — a session whose warehouse has the sf0.001
-    # bucketed layout (built by the r14 zipper test) memoizes the _bkt name
-    assert (
-        graph._shared_get(spark, sf001, "pair_weights") is not None
-        or graph._shared_get(spark, sf001, "pair_weights_bkt") is not None
-    )
-    assert graph._shared_get(spark, "/root/testdata/sf0.01", "pair_weights") is None
-    assert (
-        graph._shared_get(spark, "/root/testdata/sf0.01", "pair_weights_bkt") is None
-    )
-    _clear_shared()
-
-
-def test_graph_shared_cache_bounded(spark, sf001):
-    """The LRU cap must hold no matter how many artifacts a session
-    touches (evicted entries release their checkpoint refs)."""
-    from kwery_spark.operators import graph
-
-    _clear_shared()
-    for i in range(graph._SHARED_CAP + 5):
-        graph._shared_put(spark, sf001, f"fake_{i}", object())
-    assert len(graph._SHARED) == graph._SHARED_CAP
-    _clear_shared()
 
 
 def test_minhash_summary_counts_are_exact_longs(spark, sf001):

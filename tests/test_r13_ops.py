@@ -19,26 +19,26 @@ SF001 = "/root/testdata/sf0.001"
 
 
 def _clear_shared():
-    from kwery_spark.operators import graph
+    from kwery_spark.catalog import _MEMO
 
-    graph._SHARED.clear()
+    _MEMO.clear()
 
 
 @pytest.mark.parametrize("key", ["graph_pagerank", "graph_shortest_path"])
 def test_bipartite_keys_never_build_the_edge_frame(spark, key):
     """r13 family contract: the bipartite half-update keys run straight
     off _pair_weights — a cold run must NOT create the bidirected
-    'edges'/'edges_deg' artifacts (their 352M-row sf30 build is exactly
+    'edges' artifact (its 352M-row sf30 build is exactly
     what the rewrite deleted; recreating one silently would re-tax the
     family, the r13 BFS-subsidy lesson in CLAUDE.md)."""
-    from kwery_spark.operators import graph
+    from kwery_spark.catalog import _MEMO
 
     _clear_shared()
     QUERIES[key](spark, SF001).collect()
-    built = {k[-1] for k in graph._SHARED}
+    built = {k[-1] for k in _MEMO}
     # either arm's artifact counts (ADVICE r14: the name carries the arm)
     assert built & {"pair_weights", "pair_weights_bkt"}, built
-    assert "edges" not in built and "edges_deg" not in built, built
+    assert "edges" not in built, built
     _clear_shared()
 
 

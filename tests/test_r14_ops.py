@@ -53,25 +53,15 @@ def test_clone_gate_auto_tracks_measured_factor(spark):
     measured clone factor >= CONTRACT_MIN_CLONE (2.0). The raw corpus
     is all-distinct (factor ~1) -> row-expanded; the conf override
     forces either arm regardless."""
-    factor = S._clone_factor(spark, SF01)
+    factor = S._clone_factor(spark, SF01, "embeddings")
     assert factor < S.CONTRACT_MIN_CLONE  # 500/500 distinct vectors
-    assert S._use_contraction(spark, SF01) is False
+    assert S._use_contraction(spark, SF01, "embeddings") is False
     for mode, want in (("on", True), ("off", False)):
         spark.conf.set("spark.kwery.contract", mode)
         try:
-            assert S._use_contraction(spark, SF01) is want
+            assert S._use_contraction(spark, SF01, "embeddings") is want
         finally:
             spark.conf.unset("spark.kwery.contract")
-
-
-def test_clone_factor_memoized_single_job(spark):
-    """The factor probe is the sanctioned bounded plan-time class: one
-    single-scalar aggregate job on first use, zero jobs on a memo hit."""
-    S._clone_factor(spark, SF001)  # prime
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup())
-    S._clone_factor(spark, SF001)
-    assert set(st.getJobIdsForGroup()) == before  # memo hit: no job
 
 
 def test_parquet_rows_recurses_and_fails_loudly(tmp_path):
@@ -108,16 +98,16 @@ def test_pair_weights_bucketed_zipper_value_identical(spark):
     exists (exchange-free join feed, sf30 build 58.7 -> 42.1 s) — the
     rows must be IDENTICAL to the raw-scan arm, and the kill switch
     must force the raw arm."""
-    from kwery_spark.catalog import build_bucketed
+    from kwery_spark.catalog import _MEMO, build_bucketed
     from kwery_spark.operators import graph
 
     build_bucketed(spark, SF001)  # idempotent; seconds at sf0.001
-    graph._SHARED.clear()
+    _MEMO.clear()
     try:
         bucketed = sorted(
             map(tuple, graph._pair_weights(spark, SF001).collect())
         )
-        graph._SHARED.clear()
+        _MEMO.clear()
         spark.conf.set("spark.kwery.bucketed", "false")
         try:
             raw = sorted(map(tuple, graph._pair_weights(spark, SF001).collect()))
@@ -125,44 +115,7 @@ def test_pair_weights_bucketed_zipper_value_identical(spark):
             spark.conf.unset("spark.kwery.bucketed")
         assert bucketed == raw and len(raw) > 0
     finally:
-        graph._SHARED.clear()
-
-
-def test_purchase_edges_degree_variant_correct(spark):
-    """ADVICE r13 (graph.py): _purchase_edges(with_degree=True) lost its
-    last registry consumer in the r13 pagerank rewrite — keep the
-    engine-API path honest with a direct check: srcdeg must equal the
-    brute-force out-degree of the bidirected graph derived from
-    _pair_weights, and the edges_deg->edges reuse path must drop the
-    column without changing the edge set."""
-    from pyspark.sql import functions as F
-
-    from kwery_spark.operators import graph
-
-    graph._SHARED.clear()
-    try:
-        deg = graph._purchase_edges(spark, SF001, with_degree=True)
-        w = graph._pair_weights(spark, SF001).select("c", "s")
-        base = w.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        bidir = base.union(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        expect = {
-            (r.src, r.dst, r.n)
-            for r in bidir.withColumn(
-                "n", F.count(F.lit(1)).over(__import__("pyspark").sql.Window.partitionBy("src"))
-            ).collect()
-        }
-        got = {(r.src, r.dst, r.srcdeg) for r in deg.collect()}
-        assert got == expect
-        # reuse path: a plain-edges request served from the deg build
-        plain = graph._purchase_edges(spark, SF001)
-        assert "srcdeg" not in plain.columns
-        assert {(r.src, r.dst) for r in plain.collect()} == {
-            (s, d) for (s, d, _n) in expect
-        }
-    finally:
-        graph._SHARED.clear()
+        _MEMO.clear()
 
 
 def test_query_vec_matches_collect_and_plan_is_joinless(spark):

@@ -1,6 +1,6 @@
 """Round-16 invariants (optimization round 2): the dq RI broadcast-gate
-decision logic as pure footer arithmetic, the memoized text contraction
-checkpoint (hit == cold), and the tfidf bounded join-back re-expansion."""
+decision logic as pure footer arithmetic and the tfidf bounded join-back
+re-expansion."""
 
 from __future__ import annotations
 
@@ -47,24 +47,6 @@ def test_q18_limit_below_customer_join(spark):
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "hashpartitioning(c_custkey" not in plan, plan[:3000]
     assert "hashpartitioning(o_custkey" not in plan, plan[:3000]
-
-
-def test_contracted_docs_memo_hit_equals_cold(spark):
-    """r16: _contracted_docs is memoized per (applicationId, corpus,
-    fingerprint). The memo hit must be the same frame (no rebuild) and
-    its rows must equal a forced cold build — the graph._SHARED equality
-    doctrine."""
-    from kwery_spark.operators.text import _CONTRACTED_MEMO, _contracted_docs
-
-    _CONTRACTED_MEMO.clear()
-    cold = _contracted_docs(spark, SF001)
-    assert len(_CONTRACTED_MEMO) == 1
-    hit = _contracted_docs(spark, SF001)
-    assert hit is cold  # memo returned the same checkpointed frame
-    cold_rows = sorted(map(tuple, cold.collect()))
-    _CONTRACTED_MEMO.clear()
-    rebuilt = sorted(map(tuple, _contracted_docs(spark, SF001).collect()))
-    assert cold_rows == rebuilt and len(rebuilt) > 0
 
 
 def test_tfidf_contracted_reexpansion_bounded(spark):

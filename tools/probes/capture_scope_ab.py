@@ -3,7 +3,7 @@ sf10 sweep showed the _pair_weights family winning under capture but
 graph_triangle_count / graph_kcore (consumers of the events-based
 _contracted_copurchase, whose redges build is a rep-pair join AQE might
 skew-split) and text_tfidf / text_rake_keywords drifting UP. Same-box
-alternating A/B, fresh _SHARED/_CONTRACTED state per arm rep, capture
+alternating A/B, a cleared session memo (catalog.memo) per arm rep, capture
 on vs off, to decide whether capture should be scoped out of the
 contraction builds.
 
@@ -33,8 +33,7 @@ spark.sparkContext.setLogLevel("ERROR")
 spark.conf.set("spark.kwery.bucketed", "false")  # sweep protocol
 
 import kwery_spark.all_ops  # noqa: F401
-from kwery_spark.operators import graph as G
-from kwery_spark.operators import text as T
+from kwery_spark.catalog import _MEMO
 from kwery_spark.registry import QUERIES
 
 KEYS = [
@@ -61,8 +60,7 @@ for rep in range(reps):
             "spark.kwery.ckpt.capture", "true" if arm == "on" else "false"
         )
         # cold state per arm-rep: contraction/memos rebuilt
-        G._SHARED.clear()
-        T._CONTRACTED_MEMO.clear()
+        _MEMO.clear()
         for key in KEYS:
             t0 = time.perf_counter()
             n = QUERIES[key](spark, sf_dir).count()

@@ -21,13 +21,13 @@ import pyspark.sql.functions as F
 from pyspark.sql.functions import broadcast
 
 import kwery_spark.all_ops  # noqa: F401
-from kwery_spark.catalog import broadcast_fits
+from kwery_spark.catalog import _MEMO, broadcast_fits
 from kwery_spark.operators import graph as G
 from kwery_spark.plans.inspect import formatted_plan
 
 for arm in ("off", "on"):
     spark.conf.set("spark.kwery.ckpt.capture", "false" if arm == "off" else "true")
-    G._SHARED.clear()
+    _MEMO.clear()
     w = G._pair_weights(spark, sf_dir)
     pairs = w.select("c", "s")
     degc = G._lckpt(pairs.groupBy("c").agg(F.count(F.lit(1)).alias("degc")))

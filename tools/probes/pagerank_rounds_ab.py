@@ -8,7 +8,7 @@ single join stage via explode, one partially-aggregated groupBy(node)
 on the disjoint even/odd id space, parity-split after).
 
 The _pair_weights family build is paid ONCE up front (memoized in
-_SHARED), then the arms alternate A/B/A/B on the warm artifact — the
+catalog.memo), then the arms alternate A/B/A/B on the warm artifact — the
 same isolation the r12 LPA round A/B used: the build is identical in
 every arm, so only round cost differs.
 

@@ -14,8 +14,9 @@ fragmentation, ContextCleaner backlog) that made ~40% of r15's sweep
 rows diverge from their fresh-JVM probe numbers and forced seven
 separate classification A/Bs. The parent process now groups keys by
 the registered function's module (families keep sharing one session so
-memoized builders — graph._SHARED, the text contraction checkpoint —
-stay amortized exactly as a family-at-a-time production run would) and
+the builders memoized in catalog.memo — the graph artifacts, the text
+contraction checkpoint — stay amortized exactly as a family-at-a-time
+production run would) and
 spawns one child `scale_sweep.py --no-isolate` per group, mirroring
 bench.py's r11 subprocess-per-section design. `--no-isolate` runs the
 old single-session loop (child mode; also the escape hatch for
