@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import memo, table
+from kwery_spark.catalog import _SCRATCH, memo, table
 from kwery_spark.registry import register
 
 _D = 0.85  # damping
@@ -62,11 +62,7 @@ def _ckpt(df: DataFrame) -> DataFrame:
 
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-            ".scratch",
-            "checkpoints",
-        )
+        root = os.path.join(_SCRATCH, "checkpoints")
         os.makedirs(root, exist_ok=True)
         # Reliable checkpoints are only auto-cleaned while the context
         # lives (cleanCheckpoints GC hook, set in session.py); whatever a

@@ -4,13 +4,38 @@ One long-lived session per process. The conf below is tuned for the local
 test harness (tiny scale factors) but every knob is annotated with the
 100 TB-cluster setting it stands in for — the *plans* we build are the same
 either way; only sizing differs.
+
+The driver JVM starts from a dynamic class-data-sharing (CDS) archive
+kept in the checkout, ``.scratch/cds/spark-<key>.jsa``: the classes a session
+loads (~16k after a benchmark run) map from one file instead of being
+looked up across the 287 jars on the classpath one class at a time,
+which roughly halves ``session.start_s``. The key hashes the java binary
+``spark-class`` runs and the ``$SPARK_HOME/jars`` listing. When no
+archive exists for the key, the session records one instead: the JVM
+writes it to a temp file named for this process when it exits
+(~170-200 MB, ~14 s of one core on a 4-core box; this process waits for
+it at exit), and the next session promotes it once its writer is dead
+and a ``java -version`` against it exits cleanly. JDK 17 refuses a
+non-empty directory on a recorded classpath, so the archive applies
+only when ``$SPARK_HOME/conf`` holds nothing but ``*.template`` files
+and no env var adds classpath entries; ``SPARK_CONF_DIR`` then points at
+an empty directory, which is equivalent since templates are never read.
+Otherwise the environment is left untouched. ``rm -rf .scratch/cds``
+resets it. Plans, confs and results do not depend on it.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from kwery_spark.catalog import _SCRATCH
 
 # Local test sizing. At cluster scale you would let
 # spark.sql.shuffle.partitions default (or set ~2-3x total cores) and keep
@@ -57,14 +82,181 @@ def _sweep_scratch_once() -> None:
         pass  # GC must never block session construction
 
 
+# The class-data-sharing archive family; in the scratch sweep's bounded
+# set (one archive per key, by the promotion rule).
+_CDS_DIR = os.path.join(_SCRATCH, "cds")
+# Env vars that put entries on the driver classpath (or, for
+# SPARK_CONF_DIR, replace the conf directory) — any of them set and the
+# archive is skipped.
+_CDS_CLASSPATH_ENV = (
+    "SPARK_CONF_DIR",
+    "SPARK_CLASSPATH",
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+)
+# The gateway JVM shares this process's stdout; recording otherwise
+# prints thousands of "[warning][cds] Skipping ... Signed JAR" lines.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+
+
+def _java_binary() -> str | None:
+    """The java binary spark-class runs."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _cds_key(spark_home: str, java: str) -> str:
+    """Hash of the java binary (realpath, size, mtime) and of the
+    ``$SPARK_HOME/jars`` listing (name, size, mtime per jar): a JDK or
+    Spark-jar change names a new archive."""
+    h = hashlib.sha256()
+    real = os.path.realpath(java)
+    st = os.stat(real)
+    h.update(f"{real}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, name))
+        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _cds_applies(spark_home: str) -> bool:
+    """Whether the driver classpath is just ``$SPARK_HOME/jars`` plus a
+    conf directory the archive may replace with an empty one: no env var
+    adds entries, and ``$SPARK_HOME/conf`` is missing or holds only
+    ``*.template`` files."""
+    own_conf = os.path.join(_CDS_DIR, "conf")
+    if any(os.environ.get(v) for v in _CDS_CLASSPATH_ENV if os.environ.get(v) != own_conf):
+        return False
+    try:
+        names = os.listdir(os.path.join(spark_home, "conf"))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+    return all(n.endswith(".template") for n in names)
+
+
+def _recording(tmp: str) -> bool:
+    """Whether a recording may still be written: the process named in
+    its ``_pidN`` suffix is alive, or a live process (the JVM it
+    launched, which writes at its own exit) records into it."""
+    try:
+        os.kill(int(tmp.rsplit("_pid", 1)[1]), 0)
+        return True
+    except ProcessLookupError:
+        pass
+    except PermissionError:
+        return True
+    needle = f"-XX:ArchiveClassesAtExit={tmp}\0".encode()
+    try:
+        pids = [p for p in os.listdir("/proc") if p.isdigit()]
+    except FileNotFoundError:
+        return False
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if needle in f.read():
+                    return True
+        except OSError:
+            continue
+    return False
+
+
+def _archive_ok(java: str, path: str) -> bool:
+    """A JVM maps ``path`` and exits cleanly. A truncated archive crashes
+    the JVM (SIGBUS) in ~0.03 s; a complete one passes in ~0.15 s and
+    reports "sharing"."""
+    try:
+        out = subprocess.run(
+            [java, f"-XX:SharedArchiveFile={path}", "-XX:ErrorFile=/dev/null",
+             "-XX:-CreateCoredumpOnCrash", "-Xlog:disable", "-version"],
+            stdin=subprocess.DEVNULL, capture_output=True, timeout=60,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return out.returncode == 0 and b"sharing" in out.stderr
+
+
+def _promote(java: str, archive: str) -> None:
+    """Turn a finished recording of ``archive`` into the archive. A temp
+    file whose writer is dead is promoted if it passes _archive_ok and
+    deleted otherwise; promotion deletes the archives of other keys."""
+    prefix = os.path.basename(archive) + "_pid"
+    promoted = False
+    for name in sorted(os.listdir(_CDS_DIR)):
+        tmp = os.path.join(_CDS_DIR, name)
+        if not name.startswith(prefix) or _recording(tmp):
+            continue
+        if not os.path.exists(archive) and _archive_ok(java, tmp):
+            os.replace(tmp, archive)
+            promoted = True
+        else:
+            os.unlink(tmp)
+    if promoted:
+        for name in os.listdir(_CDS_DIR):
+            if name.startswith("spark-") and name.endswith(".jsa") and name != os.path.basename(archive):
+                os.unlink(os.path.join(_CDS_DIR, name))
+
+
+def _await_jvm_exit() -> None:
+    """At interpreter exit, stop the context (its accumulator server
+    would otherwise report the JVM's exit as a traceback), close the
+    gateway JVM's stdin (it exits on EOF) and wait for it, so its
+    recording is complete by the time this process — the one the temp
+    file is named for — is dead."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        SparkContext._active_spark_context.stop()
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is None or proc.stdin is None:
+        return
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=120)
+    except subprocess.TimeoutExpired:
+        pass
+
+
+def _cds_options() -> str | None:
+    """Driver JVM options that start from this machine's archive, or
+    record it when there is none yet; None when the classpath
+    precondition fails, and then the environment is left untouched."""
+    spark_home = _find_spark_home()
+    java = _java_binary()
+    if not java or not _cds_applies(spark_home) or any(c.isspace() or c in "'\"\\" for c in _CDS_DIR):
+        return None
+    conf = os.path.join(_CDS_DIR, "conf")
+    try:
+        archive = os.path.join(_CDS_DIR, f"spark-{_cds_key(spark_home, java)}.jsa")
+        os.makedirs(conf, exist_ok=True)
+        if not os.path.exists(archive):
+            _promote(java, archive)
+    except OSError:
+        return None  # a concurrent promotion or sweep; start without
+    os.environ["SPARK_CONF_DIR"] = conf
+    if os.path.exists(archive):
+        return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}"
+    atexit.unregister(_await_jvm_exit)
+    atexit.register(_await_jvm_exit)
+    return f"-XX:ArchiveClassesAtExit={archive}_pid{os.getpid()} {_CDS_QUIET}"
+
+
 def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSession.Builder:
+    # before the sweep, which deletes recordings whose process is dead
+    cds = _cds_options()
     _sweep_scratch_once()
     if cpus is None:
         # the cores this process may run on (unlike os.cpu_count, this
         # honors the CPU affinity mask), so local[N] fits the box
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    b = SparkSession.builder
+    if cds:
+        b = b.config("spark.driver.extraJavaOptions", cds)
     return (
-        SparkSession.builder.appName(app_name)
+        b.appName(app_name)
         .master(f"local[{cpus}]")
         # AQE: runtime re-planning — coalesces shuffle partitions, converts
         # sort-merge to broadcast when runtime stats allow, splits skewed
@@ -101,7 +293,7 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         # side is provably small regardless of SF (region/nation: fixed 5/25
         # rows) and rely on AQE elsewhere.
         .config("spark.sql.session.timeZone", "UTC")
-        # local[32] runs driver + all 32 executor threads in ONE heap;
+        # local[N] runs the driver and all N executor threads in ONE heap;
         # 16g sizes it for the sf10 bench decade (60M-row lineitem, 24 MB
         # broadcast builds) — r6: with 8g the multi-scale bench session
         # slowed q5's sf10 section 2.3x through GC pressure alone.

@@ -15,12 +15,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from kwery_spark.catalog import round6, table
+from kwery_spark.catalog import _SCRATCH, round6, table
 from kwery_spark.registry import register
 
 # Local scratch for sink round-trips; at cluster scale this would be an
-# object-store path. Kept inside the repo (gitignored) per sandbox rules.
-SCRATCH = "/root/repo/.scratch"
+# object-store path. The checkout's own .scratch (gitignored), the one
+# scratch root every module derives its directories from.
+SCRATCH = _SCRATCH
 
 
 def _scratch(*parts: str) -> str:
@@ -30,10 +31,10 @@ def _scratch(*parts: str) -> str:
 
 
 def sweep_dead_pid_dirs(parent: str) -> None:
-    """Remove sibling ``*_pidN`` scratch dirs whose owning process is
-    dead (kill(pid, 0) discipline — the shared fixture-hygiene pattern
-    of txnlog/warehouse). Call before writing a new pid-suffixed dir so
-    exports from crashed or finished sessions don't accumulate."""
+    """Remove sibling ``*_pidN`` scratch dirs and files whose owning
+    process is dead (kill(pid, 0) discipline — the shared fixture-hygiene
+    pattern of txnlog/warehouse). Call before writing a new pid-suffixed
+    entry so exports from crashed or finished sessions don't accumulate."""
     import shutil
 
     try:
@@ -47,19 +48,27 @@ def sweep_dead_pid_dirs(parent: str) -> None:
         pid = int(pid_part[1])
         if pid == os.getpid():
             continue
+        path = os.path.join(parent, entry)
         try:
             os.kill(pid, 0)
         except ProcessLookupError:
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                try:
+                    os.unlink(path)
+                except OSError:
+                    pass
         except PermissionError:
             pass
 
 
 # Families that are rewritten IN PLACE under a stable name (one dir per
-# SF, fingerprint-invalidated): their growth is bounded by construction,
-# and their mtime does not refresh on valid reuse — exempt from the TTL
-# sweep so a still-valid staged layout is never thrashed.
-_BOUNDED_SCRATCH = {"optimized", "bucketed"}
+# SF, fingerprint-invalidated; one class-data-sharing archive per key,
+# see session.py): their growth is bounded by construction, and their
+# mtime does not refresh on valid reuse — exempt from the TTL sweep so a
+# still-valid staged layout or archive is never thrashed.
+_BOUNDED_SCRATCH = {"optimized", "bucketed", "cds"}
 
 
 def sweep_scratch(ttl_hours: float | None = None) -> int:

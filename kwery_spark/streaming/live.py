@@ -19,11 +19,11 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from kwery_spark.catalog import _normalize_ts
+from kwery_spark.catalog import _SCRATCH, _normalize_ts
 from kwery_spark.registry import register
 from kwery_spark.sources.scans import _corpus_fingerprint
 
-SCRATCH = "/root/repo/.scratch/streaming"
+SCRATCH = os.path.join(_SCRATCH, "streaming")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -94,3 +94,51 @@ def test_sweep_scratch_removes_stale_keeps_live(tmp_path, monkeypatch):
     assert not old.exists() and not dead.exists()
     assert young.exists() and bounded.exists()
     assert removed >= 1
+
+
+def test_sweep_scratch_keeps_cds_archive(tmp_path, monkeypatch):
+    # A reused class-data-sharing archive keeps its old mtime: the TTL
+    # sweep must leave it, while a dead recording (*_pidN) still goes.
+    from kwery_spark.sources import scans
+
+    cds = tmp_path / "cds"
+    cds.mkdir()
+    archive = cds / "spark-x.jsa"
+    archive.write_bytes(b"x")
+    dead = cds / "spark-x.jsa_pid999999999"
+    dead.write_bytes(b"x")
+    monkeypatch.setattr(scans, "SCRATCH", str(tmp_path))
+    scans.sweep_scratch(ttl_hours=0)
+    assert archive.exists()
+    assert not dead.exists()
+
+
+def test_scratch_roots_under_package_parent():
+    # One scratch root: every module's scratch constant sits inside the
+    # checkout the package was imported from, never at a fixed path.
+    import sys
+
+    import kwery_spark
+    from kwery_spark import session
+    from kwery_spark.sources import scans, snapshot, txnlog  # noqa: F401
+    from kwery_spark.streaming import live  # noqa: F401
+
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(kwery_spark.__file__)))
+    assert scans.SCRATCH == catalog._SCRATCH
+    roots = {
+        f"{name}.{attr}": value
+        for name, mod in list(sys.modules.items())
+        if name.startswith("kwery_spark")
+        for attr, value in vars(mod).items()
+        if "SCRATCH" in attr and isinstance(value, str)
+    }
+    roots["kwery_spark.session._CDS_DIR"] = session._CDS_DIR
+    assert {
+        "kwery_spark.catalog._SCRATCH",
+        "kwery_spark.sources.scans.SCRATCH",
+        "kwery_spark.sources.txnlog.SCRATCH",
+        "kwery_spark.sources.snapshot.SCRATCH",
+        "kwery_spark.streaming.live.SCRATCH",
+    } <= set(roots)
+    for name, value in roots.items():
+        assert os.path.commonpath([parent, os.path.abspath(value)]) == parent, name

@@ -44,7 +44,7 @@ def main() -> None:
         b = b.config("spark.sql.variant.pushVariantIntoScan", "true")
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    from kwery_spark.catalog import analyze_tables, optimize_layout, scan_splits, table
+    from kwery_spark.catalog import _SCRATCH, analyze_tables, optimize_layout, scan_splits, table
 
     optimize_layout(spark, sf_dir)
     analyze_tables(spark, sf_dir)
@@ -54,7 +54,7 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", str(min(64, max(8, rows // 500_000))))
 
     # --- r6 fixture staging (one-time per corpus, outside timing) ---
-    exp_root = os.path.join("/root/repo/.scratch", "exp_json", os.path.basename(sf_dir.rstrip("/")))
+    exp_root = os.path.join(_SCRATCH, "exp_json", os.path.basename(sf_dir.rstrip("/")))
 
     def _staged(kind: str) -> str:
         """events copy with props in the requested representation."""
