@@ -217,7 +217,7 @@ def _measure_duckdb(
 
     ``prep_tables`` (scaled sections, ADVICE r4): load each parquet file
     into a native DuckDB table OUTSIDE the timed region — the equivalent
-    of the offline optimize_layout+ANALYZE prep Spark gets — so the
+    of the offline optimize_layout+bucketing prep Spark gets — so the
     gate_2x comparison carries no storage-prep asymmetry. Measured at
     sf3: native tables run the headline oracles ~6% faster than parquet
     views (3.67 s vs 3.90 s), i.e. the r4 asymmetry flattered Spark's
@@ -263,16 +263,13 @@ def _measure_duckdb(
 
 
 def _prep(spark, sf_dir: str) -> None:
-    from kwery_spark.catalog import analyze_tables, optimize_layout
+    from kwery_spark.catalog import build_bucketed, optimize_layout
 
     optimize_layout(spark, sf_dir)
-    analyze_tables(spark, sf_dir)
-    # Step 3 of the offline maintenance: orders+lineitem hash-bucketed on
+    # Step 2 of the offline maintenance: orders+lineitem hash-bucketed on
     # orderkey (catalog.build_bucketed) so the fact-chain joins in q3/q5
     # run exchange-free. Same values, different physical layout; cached
     # per session via the in-memory catalog + corpus fingerprint.
-    from kwery_spark.catalog import build_bucketed
-
     build_bucketed(spark, sf_dir)
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
@@ -295,8 +292,7 @@ def _prep(spark, sf_dir: str) -> None:
     # was measured NOT to recover this, it still pays the map-side shuffle
     # write. At sf1 the same 32 MB REGRESSES q3 (0.60 -> 1.06 s): the
     # whole fact side is small there, so the broadcast build costs more
-    # than the shuffle it saves. ANALYZE stats are in place either way,
-    # so the estimates the planner compares against are real sizes.
+    # than the shuffle it saves.
     if rows >= 15_000_000:
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)
@@ -401,7 +397,7 @@ def _run_section(name: str, factor: int, runs: int, src_dir: str) -> dict:
         "gate_2x": total <= 2 * btotal,
         "runs_per_query": runs,
         "duckdb_prep": "native-table load excluded from timing "
-        "(mirrors Spark optimize_layout+ANALYZE+bucketing offline prep)",
+        "(mirrors Spark optimize_layout+bucketing offline prep)",
         "semi_structured_prep": "events.props stored in each engine's "
         "native semi-structured type at ingest (Spark VARIANT binary / "
         "DuckDB JSON); Spark's is binary-parsed, DuckDB's string-backed "
@@ -516,9 +512,8 @@ def main() -> None:
     #    parse, joins and aggregation all still run inside the timed
     #    region. Non-bench sessions (incl. the correctness gate) keep
     #    reading the raw files.
-    # 2. analyze_tables + CBO confs: rowCount/NDV stats so q3/q5 plan
-    #    join order cost-based (the baseline engine likewise plans from
-    #    parquet metadata it reads before execution).
+    # 2. build_bucketed: orders+lineitem hash-bucketed on orderkey so
+    #    the q3/q5 fact-chain joins run exchange-free.
     # Both steps are fingerprint-cached per session (in-memory catalog).
     _prep(spark, sf_dir)
     queries = entrymod.queries()

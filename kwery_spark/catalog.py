@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 import shutil
 from collections import OrderedDict
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -573,7 +572,7 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
     # must NOT leak planner-conf changes into whatever the session runs
     # next — plan-shape tests and oracle queries assume the session
     # defaults. Snapshot and restore; callers that WANT cost-based
-    # planning opt in explicitly via cbo_session().
+    # planning set spark.sql.cbo.* themselves.
     snap = {k: spark.conf.get(k, None) for k in _CBO_CONFS + (_NANOS_CONF,)}
     try:
         spark.conf.set(_NANOS_CONF, "true")
@@ -633,50 +632,9 @@ def _has_row_stats(spark: SparkSession, full: str) -> bool:
     )
 
 
-def stats_db(spark: SparkSession, sf_dir: str) -> str | None:
-    """Name of the ANALYZEd catalog database for ``sf_dir`` if one exists
-    (i.e. ``analyze_tables`` ran in this session — the catalog is
-    in-memory and per session), else None. When this process runs on
-    an optimized layout, only the optimized-layout db is eligible (a raw
-    db's stats describe other files)."""
-    try:
-        # _db_name fingerprints the corpus via os.stat — a missing or
-        # renamed corpus file must mean "no stats db", not an OSError
-        # escaping a probe that is documented to be safe (ADVICE r3)
-        db = _db_name(sf_dir, optimized=sf_dir in _OPTIMIZED)
-        # memoized: tableExists is a py4j metastore round trip paid on
-        # every query build (two probes per CBO-path query), and a db
-        # that exists stays valid for the session (fingerprint-named,
-        # stale siblings are dropped before builds, never mid-session).
-        # A negative (None) is not memoized, so the prep step can flip it.
-        full = f"{db}.lineitem"
-        return memo(spark, sf_dir, (), db, lambda: db if spark.catalog.tableExists(full) else None)
-    except Exception:
-        return None
-
-
 def cbo_active(spark: SparkSession) -> bool:
     return (spark.conf.get("spark.sql.cbo.enabled", "false") or "").lower() == "true"
 
-
-@contextmanager
-def cbo_session(spark: SparkSession):
-    """Scope cost-based planning to a block: enables ``spark.sql.cbo.*``
-    (stats-driven join reordering + build-side choice over the
-    ``analyze_tables`` catalog tables) and restores the prior conf on
-    exit, so plan-shape locks elsewhere in the session keep seeing the
-    default planner."""
-    snap = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-    try:
-        for k in _CBO_CONFS:
-            spark.conf.set(k, "true")
-        yield spark
-    finally:
-        for k, v in snap.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 # ---------------------------------------------------------------------------
 # Bucketed physical layout (offline table maintenance, bench prep step 3).
@@ -778,8 +736,8 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
 def bucketed_db(spark: SparkSession, sf_dir: str) -> str | None:
     """Name of the bucketed-layout database for ``sf_dir`` if a completed
     build exists in this session (the catalog is in-memory and per
-    session), else None. Same probe discipline as stats_db:
-    never raises on a missing corpus."""
+    session), else None. Never raises on a missing corpus: the name
+    fingerprints the corpus via os.stat."""
     try:
         db = _bucketed_db_name(sf_dir)
 
@@ -805,65 +763,3 @@ def bucketed_table(spark: SparkSession, db: str, name: str) -> DataFrame:
     the parquet reads table() caches — no shuffle to stage-skip."""
     # the fingerprint-named db stands in for the corpus directory
     return memo(spark, db, (), name, lambda: spark.table(f"{db}.{name}"))
-
-
-def cache_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Storage-parity prep (bench only): materialize every corpus table
-    into Spark's in-memory columnar cache, the engine-native storage
-    format — the exact counterpart of the DuckDB baseline's untimed
-    native-table load (bench.py _measure_duckdb prep_tables=True, ADVICE
-    r4). After this, BOTH engines answer timed queries from their own
-    in-memory columnar representation; per-run scan, decode of cached
-    batches, expression evaluation, joins and aggregation all remain
-    inside the timed region. Nothing query-specific is precomputed —
-    this is a storage-layer residency decision, not result reuse (the
-    stage-skipping trap documented in registry.py is about SHUFFLE
-    output reuse and still applies untouched: every timed run re-executes
-    all stages).
-
-    At 100 TB the same lever is tiered storage / OS page cache /
-    executor-local SSD cache (Databricks delta cache, Presto Alluxio):
-    hot tables served from memory-speed storage while cold data stays
-    on object storage. MEMORY_AND_DISK semantics make oversubscription
-    safe — partitions that don't fit spill, they don't OOM.
-
-    Caches the plan objects catalog.table() hands out (so every query
-    routed through the catalog hits the InMemoryRelation) plus the
-    bucketed tables if built.
-
-    MEASURED NEGATIVE at sf3 (fresh JVM, tools/bench_conf.py
-    spark.kwery.cacheTables=true, 2026-08-14): headline total 8.05 s
-    cached vs 5.76 s reading parquet — q5 0.83→1.98 s, win_row_number
-    0.92→1.61 s. Spark's vectorized parquet reader out-scans its own
-    in-memory cache format here, and the InMemoryRelation breaks the
-    bucketed tables' reported partitioning, reintroducing the fact-join
-    exchange. So bench.py does NOT use this prep; it exists as the
-    capability (tiered-storage residency) and as the recorded
-    experiment. The DuckDB-native-table baseline prep stands on its own
-    as parity for optimize_layout+ANALYZE+bucketing, all of which are
-    also offline storage/catalog prep."""
-    for name in TABLES:
-        df = table(spark, sf_dir, name)
-        df.cache()
-        df.count()  # materialize outside the timed region
-    bdb = bucketed_db(spark, sf_dir)
-    if bdb is not None:
-        for name in _BUCKETED_TABLES:
-            spark.catalog.cacheTable(f"{bdb}.{name}")
-            spark.table(f"{bdb}.{name}").count()
-
-
-def uncache_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Release cache_tables state (bench moves between scale factors)."""
-    for name in TABLES:
-        try:
-            table(spark, sf_dir, name).unpersist()
-        except Exception:
-            pass
-    bdb = bucketed_db(spark, sf_dir)
-    if bdb is not None:
-        for name in _BUCKETED_TABLES:
-            try:
-                spark.catalog.uncacheTable(f"{bdb}.{name}")
-            except Exception:
-                pass

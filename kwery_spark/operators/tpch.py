@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, memo, stats_db, table
+from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, memo, table
 from kwery_spark.registry import register
 
 
@@ -21,11 +21,11 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> str | None:
     into cost-based planning AND the offline bucketed build for this
     corpus exists (bench prep runs catalog.build_bucketed). Everything
     else — the correctness gate, vanilla driver sessions — gets None and
-    falls through to the stats/hand plans over raw files."""
+    falls through to the hand plans over raw files."""
     if not cbo_active(spark):
         return None
     # experiment kill-switch (tools/bench_conf.py A/B runs):
-    # spark.kwery.bucketed=false measures the stats/hand plans with the
+    # spark.kwery.bucketed=false measures the hand plans with the
     # bucketed build present but unused
     if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() == "false":
         return None
@@ -69,25 +69,6 @@ def _nation_rows(spark: SparkSession, sf_dir: str) -> tuple:
 def _asia_nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:
     rows, asia = _nation_rows(spark, sf_dir)
     return sorted(k for (k, _n, rk) in rows if rk in asia)
-
-
-def _stats_sql(spark: SparkSession, sf_dir: str, sql_fmt: str) -> DataFrame | None:
-    """Cost-based path: when the session has CBO enabled AND an ANALYZEd
-    catalog database exists for this sf_dir (catalog.analyze_tables —
-    bench.py bootstraps it), plan the query over the stats-backed catalog
-    tables and let the optimizer pick join order and build sides from
-    rowCount/NDV instead of our hand-ordering. Returns None when either
-    ingredient is missing, in which case callers fall back to the
-    hand-tuned DataFrame plan — heuristics when stats are absent, CBO
-    when they exist, exactly the posture a long-lived deployment has.
-    Measured at sf0.1: q5 0.59 s → 0.38 s (CBO floats the supplier join
-    under lineitem ahead of customer), q3 0.36 s → 0.28 s."""
-    if not cbo_active(spark):
-        return None
-    db = stats_db(spark, sf_dir)
-    if db is None:
-        return None
-    return spark.sql(sql_fmt.format(db=db))
 
 
 @register(
@@ -167,8 +148,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     selective c_mktsegment and date filters sit below the joins (Catalyst
     pushes them to the scans), so the shuffle carries only qualifying rows.
     The final ORDER BY+LIMIT fuses to TakeOrderedAndProject — no global sort.
-    Under an ANALYZEd catalog + CBO (bench path) the same query is planned
-    from statistics instead — see _stats_sql.
 
     Bucketed path (bench prep step 3, catalog.build_bucketed): with
     orders+lineitem hash-bucketed on orderkey, the plan is rewritten
@@ -209,25 +188,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
             .limit(10)
         )
-    stats = _stats_sql(
-        spark,
-        sf_dir,
-        """
-        SELECT l.l_orderkey,
-               sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
-               o.o_orderdate, o.o_orderpriority
-        FROM {db}.customer c
-        JOIN {db}.orders o ON c.c_custkey = o.o_custkey
-        JOIN {db}.lineitem l ON l.l_orderkey = o.o_orderkey
-        WHERE c.c_mktsegment = 'BUILDING'
-          AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-          AND l.l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-        ORDER BY revenue DESC, l_orderkey LIMIT 10
-        """,
-    )
-    if stats is not None:
-        return stats
     cust = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     cutoff = F.lit("1998-03-15 00:00:00").cast("timestamp")
     orders = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
@@ -273,10 +233,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of three. Only customer⋈orders⋈lineitem shuffles, on natural
     keys. The c_nationkey = s_nationkey residual rides on the l_suppkey
     equi-join. (Measured: ~8% faster than three separate dim broadcasts
-    at sf0.1 with identical results.) Under an ANALYZEd catalog + CBO
-    (bench path) join order comes from statistics instead — see
-    _stats_sql; the optimizer floats supplier⋈nation⋈region under
-    lineitem ahead of customer, worth another ~35% at sf0.1.
+    at sf0.1 with identical results.)
 
     Bucketed path (catalog.build_bucketed, bench prep): lineitem joins
     the broadcast ASIA dims first (a filter in disguise — broadcast
@@ -358,28 +315,6 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .coalesce(1)
             .sortWithinPartitions(F.col("revenue").desc())
         )
-    stats = _stats_sql(
-        spark,
-        sf_dir,
-        """
-        SELECT n.n_name, sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue
-        FROM {db}.customer c
-        JOIN {db}.orders o   ON c.c_custkey = o.o_custkey
-        JOIN {db}.lineitem l ON l.l_orderkey = o.o_orderkey
-        JOIN {db}.supplier s ON l.l_suppkey = s.s_suppkey
-                            AND c.c_nationkey = s.s_nationkey
-        JOIN {db}.nation n   ON s.s_nationkey = n.n_nationkey
-        JOIN {db}.region r   ON n.n_regionkey = r.r_regionkey
-        WHERE r.r_name = 'ASIA'
-          AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-        GROUP BY n.n_name
-        """,
-    )
-    if stats is not None:
-        # same ≤25-row single-task sort as the hand-tuned plan (an SQL
-        # ORDER BY would add a range-exchange sampling job)
-        return stats.coalesce(1).sortWithinPartitions(F.col("revenue").desc())
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))

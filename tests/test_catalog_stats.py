@@ -50,31 +50,39 @@ def test_analyze_tables_records_cbo_stats(spark, sf_dir):
     }
 
 
-def test_cbo_stats_path_value_invariance(spark, sf_dir):
-    """q3/q5 switch to stats-backed CBO planning when the session has
-    cbo.enabled AND an ANALYZEd catalog db (the bench posture). The two
-    paths must return identical values, and the switch must not leak:
-    with CBO off (every other session) the hand-tuned plan is used."""
-    from kwery_spark.catalog import cbo_session
+def test_bucketed_tpch_arms_value_identical(spark, sf_dir):
+    """q3/q5 read the orderkey-bucketed layout when the session has
+    cbo.enabled AND a completed build_bucketed (the bench posture). The
+    bucketed arms must return the raw arms' rows; the spark.kwery.bucketed
+    kill switch forces the raw arm with the build present."""
+    from kwery_spark.catalog import build_bucketed
     from kwery_spark.plans import inspect
 
-    analyze_tables(spark, sf_dir)
-    for key in ("q3_shipping_priority", "q5_local_supplier"):
-        default_rows = sorted(map(tuple, QUERIES[key](spark, sf_dir).collect()))
-        with cbo_session(spark):
+    build_bucketed(spark, sf_dir)  # idempotent; seconds at sf0.001
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    try:
+        for key in ("q3_shipping_priority", "q5_local_supplier"):
             df = QUERIES[key](spark, sf_dir)
-            # proves the stats path engaged: plan reads catalog tables
-            assert "kwery_" in inspect.formatted_plan(df), key
-            cbo_rows = sorted(map(tuple, df.collect()))
-        assert [r[0] for r in cbo_rows] == [r[0] for r in default_rows], key
-        for a, b in zip(cbo_rows, default_rows):
-            for x, y in zip(a, b):
-                if isinstance(x, float):
-                    assert abs(x - y) <= 1e-6 * max(1.0, abs(y)), (key, a, b)
-                else:
-                    assert x == y, (key, a, b)
-        # off again: back to the hand-tuned parquet plan
-        assert "kwery_" not in inspect.formatted_plan(QUERIES[key](spark, sf_dir))
+            # proves the bucketed arm engaged: the plan reads kwery_bkt_*
+            assert "kwery_bkt_" in inspect.formatted_plan(df), key
+            bucketed = sorted(map(tuple, df.collect()))
+            spark.conf.set("spark.kwery.bucketed", "false")
+            try:
+                df = QUERIES[key](spark, sf_dir)
+                assert "kwery_bkt_" not in inspect.formatted_plan(df), key
+                raw = sorted(map(tuple, df.collect()))
+            finally:
+                spark.conf.unset("spark.kwery.bucketed")
+            assert len(raw) > 0 and len(bucketed) == len(raw), key
+            for a, b in zip(bucketed, raw):
+                for x, y in zip(a, b):
+                    if isinstance(x, float):
+                        assert abs(x - y) <= 1e-6 * max(1.0, abs(y)), (key, a, b)
+                    else:
+                        assert x == y, (key, a, b)
+    finally:
+        spark.conf.unset("spark.sql.cbo.enabled")
+        spark.conf.unset("spark.kwery.bucketed")
 
 
 @pytest.mark.slow

@@ -113,15 +113,15 @@ def test_memo_misses_after_corpus_file_changes(spark, cold_memo, tmp_path):
 
 
 def test_negative_db_probe_is_not_memoized(spark, tmp_path):
-    """stats_db answers None before analyze_tables and the db name after
-    it in the same session: a negative probe is never stored."""
+    """bucketed_db answers None before build_bucketed and the db name
+    after it in the same session: a negative probe is never stored."""
     corpus = _copy_corpus(tmp_path / "sf_probe")
-    assert catalog.stats_db(spark, corpus) is None
-    db = catalog.analyze_tables(spark, corpus)
+    assert catalog.bucketed_db(spark, corpus) is None
     try:
-        assert catalog.stats_db(spark, corpus) == db
+        db = catalog.build_bucketed(spark, corpus)
+        assert catalog.bucketed_db(spark, corpus) == db
     finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        spark.sql(f"DROP DATABASE IF EXISTS {catalog._bucketed_db_name(corpus)} CASCADE")
 
 
 def test_memo_cap_holds(spark, cold_memo):

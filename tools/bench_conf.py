@@ -4,19 +4,20 @@ overrides given as KEY=VALUE args, fresh JVM per invocation.
 Usage: python tools/bench_conf.py [--sf DIR] [--prep] [--keys a,b] k=v ...
 
 --sf DIR   bench against DIR instead of /root/testdata/sf0.1
---prep     run the bench.py offline prep first (optimize_layout +
-           analyze_tables + CBO confs) so the experiment measures the
-           same storage/catalog state as the real bench
+--prep     run the bench.py offline prep first (bench._prep) so the
+           experiment measures the same storage/catalog state and confs
+           as the real bench; command-line confs are re-applied after it
 --keys     comma-separated subset of the headline keys (faster A/Bs)
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kwery_spark.session import builder
 
@@ -60,53 +61,14 @@ def main() -> None:
     from kwery_spark.registry import QUERIES
 
     if prep:
-        from kwery_spark.catalog import (
-            analyze_tables,
-            build_bucketed,
-            cache_tables,
-            optimize_layout,
-        )
+        import bench
 
-        optimize_layout(spark, sf_dir)
-        analyze_tables(spark, sf_dir)
-        build_bucketed(spark, sf_dir)
-        if (spark.conf.get("spark.kwery.cacheTables", "false") or "").lower() == "true":
-            cache_tables(spark, sf_dir)
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        # mirror bench.py _prep: shuffle parallelism scales with corpus —
-        # unless the experiment explicitly pins it on the command line
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        rows = _pq.ParquetFile(
-            _os.path.join(sf_dir, "lineitem.parquet")
-        ).metadata.num_rows
-        if not any(a.startswith("spark.sql.shuffle.partitions=") for a in confs):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(min(64, max(8, rows // 500_000)))
-            )
-        if not any(a.startswith("spark.sql.files.maxPartitionBytes=") for a in confs):
-            # mirror bench.py _prep: one split per 16 MB v3 row group
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024)
-            )
-        if not any(
-            a.startswith("spark.sql.autoBroadcastJoinThreshold=") for a in confs
-        ) and rows >= 15_000_000:
-            # mirror bench.py _prep: stats exist post-ANALYZE; the 32 MB
-            # lift is corpus-scaled (wins at sf3+/regresses sf1, r6)
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)
-            )
-        if not any(a.startswith("spark.sql.adaptive.enabled=") for a in confs):
-            # mirror bench.py _prep (r12): AQE off below 15M rows — the
-            # per-stage job materialization is pure floor at small SFs
-            spark.conf.set(
-                "spark.sql.adaptive.enabled",
-                "true" if rows >= 15_000_000 else "false",
-            )
+        bench._prep(spark, sf_dir)
+        # confs pinned on the command line win over the prep's own
+        for arg in confs:
+            k, v = arg.split("=", 1)
+            if spark.conf.isModifiable(k):
+                spark.conf.set(k, v)
     out = {}
     for key in keys:
         times = []

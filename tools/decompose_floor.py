@@ -15,10 +15,11 @@ BASELINE.md next to the q1/fn_json decompositions.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 
@@ -43,33 +44,11 @@ def main() -> None:
     spark = builder("decompose-floor").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import kwery_spark.all_ops  # noqa: F401
-    from kwery_spark.catalog import (
-        analyze_tables,
-        build_bucketed,
-        optimize_layout,
-        table,
-    )
+    import bench
+    from kwery_spark.catalog import table
     from kwery_spark.registry import QUERIES
 
-    optimize_layout(spark, sf_dir)
-    analyze_tables(spark, sf_dir)
-    build_bucketed(spark, sf_dir)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    import pyarrow.parquet as _pq
-    import os as _os
-
-    rows = _pq.ParquetFile(
-        _os.path.join(sf_dir, "lineitem.parquet")
-    ).metadata.num_rows
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(64, max(8, rows // 500_000)))
-    )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-    if rows >= 15_000_000:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)
-        )
+    bench._prep(spark, sf_dir)
 
     out: dict[str, float] = {}
 
