@@ -58,6 +58,7 @@ def test_bucketed_tpch_arms_value_identical(spark, sf_dir):
     from kwery_spark.catalog import build_bucketed
     from kwery_spark.plans import inspect
 
+    load_all()
     build_bucketed(spark, sf_dir)  # idempotent; seconds at sf0.001
     spark.conf.set("spark.sql.cbo.enabled", "true")
     try:
@@ -67,12 +68,10 @@ def test_bucketed_tpch_arms_value_identical(spark, sf_dir):
             assert "kwery_bkt_" in inspect.formatted_plan(df), key
             bucketed = sorted(map(tuple, df.collect()))
             spark.conf.set("spark.kwery.bucketed", "false")
-            try:
-                df = QUERIES[key](spark, sf_dir)
-                assert "kwery_bkt_" not in inspect.formatted_plan(df), key
-                raw = sorted(map(tuple, df.collect()))
-            finally:
-                spark.conf.unset("spark.kwery.bucketed")
+            df = QUERIES[key](spark, sf_dir)
+            assert "kwery_bkt_" not in inspect.formatted_plan(df), key
+            raw = sorted(map(tuple, df.collect()))
+            spark.conf.unset("spark.kwery.bucketed")
             assert len(raw) > 0 and len(bucketed) == len(raw), key
             for a, b in zip(bucketed, raw):
                 for x, y in zip(a, b):
