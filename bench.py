@@ -351,7 +351,7 @@ def _run_section(name: str, factor: int, runs: int, src_dir: str) -> dict:
     sys.path.insert(0, os.path.join(_REPO, "tools"))
     from gen_sf1 import ensure_scaled
 
-    sf_dir = ensure_scaled(src_dir, f"/root/repo/.data/{name}", factor)
+    sf_dir = ensure_scaled(src_dir, os.path.join(_REPO, ".data", name), factor)
     oracles = entrymod.oracle_sql()
     queries = entrymod.queries()
     spark = get_spark(f"kwery-bench-{name}")

@@ -207,22 +207,19 @@ def snap_captured(df: DataFrame, snap):
     and outputOrdering (r16). Under AQE, ``Dataset.checkpoint`` AND
     ``localCheckpoint`` both record ``UnknownPartitioning(0)`` and no
     ordering in Spark 4.1.2 — the capture reads AdaptiveSparkPlanExec's
-    pre-execution partitioning (probe tools/probes/ckpt_partitioning.py)
-    — so every "exchange-free consumer of the checkpoint" design in the
-    graph and text families was silently paying a full re-exchange
-    wherever sessions run AQE-on (sf10+ bench sections, all sweeps).
+    pre-execution partitioning (probe ckpt_partitioning,
+    BASELINE.md "Retired probes") — so every "exchange-free consumer of the
+    checkpoint" design in the graph and text families was silently
+    paying a full re-exchange wherever sessions run AQE-on (sf10+ bench
+    sections, all sweeps).
     The snapped query is typically one shuffle+agg with a partition
     count already scale-set by session/sweep confs, so losing AQE for
-    just that query is noise; everything downstream keeps AQE. Kill
-    switch ``spark.kwery.ckpt.capture=false`` restores the old behavior
-    for A/B probes.
+    just that query is noise; everything downstream keeps AQE.
 
     ``snap`` is the materializer, e.g.
     ``lambda d: d.localCheckpoint(eager=True)``.
     """
     spark = df.sparkSession
-    if (spark.conf.get("spark.kwery.ckpt.capture", "true") or "").lower() == "false":
-        return snap(df)
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:

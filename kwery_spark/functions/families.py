@@ -255,9 +255,10 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON family: parse each props string ONCE into a Spark 4 VARIANT
     (binary semi-structured representation), then extract the typed field
-    with variant_get. Fresh-JVM comparison at sf3 (tools/exp_json.py,
-    best-of-3 after warm-up): variant 0.572 s < get_json_object 0.606 <
-    json_tuple 0.634 < from_json 0.705 — VARIANT is the fastest real
+    with variant_get. Fresh-JVM comparison at sf3 (probe exp_json,
+    BASELINE.md "Retired probes", best-of-3 after warm-up): variant 0.572 s <
+    get_json_object 0.606 < json_tuple 0.634 < from_json 0.705 —
+    VARIANT is the fastest real
     JSON parse Spark offers (a regexp field-grab measured 0.268 s but is
     not a JSON parser — it mis-reads escaped/nested occurrences of the
     key, so it is not used). The residual vs DuckDB (~0.03 s at sf3) is
@@ -279,9 +280,10 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the 5-field shred forces the non-vectorized variant
     reassembly reader while the plain binary column stays on the
     vectorized path. Re-measured at sf10 (r6, VERDICT item 5, fresh JVM
-    per arm, tools/exp_json.py): stored variant 0.328 s < shredded
-    0.478 s < string+get_json_object 1.79 s < string+from_json('k INT')
-    2.36 s — the rejection holds at a scan-dominated SF and the pruned-
+    per arm, probe exp_json, BASELINE.md "Retired probes"): stored variant
+    0.328 s < shredded 0.478 s < string+get_json_object 1.79 s <
+    string+from_json('k INT') 2.36 s — the rejection holds at a
+    scan-dominated SF and the pruned-
     schema from_json arm is 7x off; representation knobs are exhausted.
     r7 closed the final arm: a fully PRE-EXTRACTED typed int column
     (props.k materialized at ingest, no variant involved) measured

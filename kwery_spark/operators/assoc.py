@@ -110,7 +110,8 @@ def assoc_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain join degrades instead of OOMing, and a partkey-bucketed
     # layout recovers the difference at 100-TB part cardinality.
     # Measured fresh-JVM alternating A/B, sweep confs, sf30: basket
-    # build 28.9-30.8 -> 21.3-22.2 s, values equal (tools/probes/pmap_ab.py).
+    # build 28.9-30.8 -> 21.3-22.2 s, values equal (probe pmap_ab,
+    # BASELINE.md "Retired probes").
     part_side = (
         F.broadcast(part) if broadcast_fits(sf_dir, "part", 24) else part
     )

@@ -281,9 +281,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 352M-edge bidirected union + srcdeg window + disk checkpoint
     the r12 form built vanishes from this key — pagerank now runs
     straight off the family's shared _pair_weights checkpoint.
-    Decomposition at sf30 (tools/decompose_pagerank.py, fresh JVM, 64
-    partitions): _pair_weights build+ckpt 68.7 s (the shared family
-    cost every first graph key pays) + degc/degs ckpts 6.7/5.8 s +
+    Decomposition at sf30 (probe decompose_pagerank,
+    BASELINE.md "Retired probes", fresh JVM, 64 partitions): _pair_weights
+    build+ckpt 68.7 s (the shared family cost every first graph key
+    pays) + degc/degs ckpts 6.7/5.8 s +
     rounds 20.3/19.7/16.8 s (honest ~19 s/round linear work over 59M
     pairs) + final materialize 4.4 s = 143.2 s. Measured cold sweep
     A/B same box/protocol: sf30 200.3 s (r12 form) → 138.3 s; sf10
@@ -405,9 +406,10 @@ def _contracted_copurchase(spark: SparkSession, sf_dir: str):
             )
         )
         # one rep-level pass serves edge gen, degree agg, and the triple join.
-        # PLAIN localCheckpoint on purpose (r16 scope A/B,
-        # tools/probes/capture_scope_ab.py): these frames are rep-level
-        # small, but their builds are joins where AQE's runtime re-planning
+        # PLAIN localCheckpoint on purpose (r16 scope A/B, probe
+        # capture_scope_ab, BASELINE.md "Retired probes"): these frames are
+        # rep-level small, but their builds are joins where AQE's
+        # runtime re-planning
         # (runtime SMJ->BHJ on the rep-pair join, partition coalescing)
         # dominates — capture (AQE-off snap) regressed triangle 7.6->21.9 s
         # and kcore 5.7->9.4 s at sf10. Capture pays only where downstream

@@ -84,9 +84,9 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans as an EXPAND ×7 — every orders row duplicated once
     per distinct column + once for the plain aggs — so 45M rows at sf30
     became 315M wide rows through the partial aggregate. The fresh-JVM
-    decomposition (tools/probes/profile_decomp.py, sf30, noop sink)
-    priced it: bare 6-col scan 0.52 s, the same aggregate MINUS the
-    distincts 1.86 s, ONE single-column countDistinct 3.24 s, the
+    decomposition (probe profile_decomp, BASELINE.md "Retired probes", sf30,
+    noop sink) priced it: bare 6-col scan 0.52 s, the same aggregate
+    MINUS the distincts 1.86 s, ONE single-column countDistinct 3.24 s, the
     committed multi-distinct form 36.8 s — the expand machinery alone
     is ~30 s of a 37 s key. Now each column profiles in its OWN
     single-distinct aggregate (planned with a per-column partial
@@ -653,9 +653,9 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8B payload), so it broadcasts under TWO plan-time footer gates:
     the catalog.broadcast_fits byte gate AND a child:parent row-ratio
     >= 6 — the per-leg fresh-JVM A/B at sf10
-    (tools/probes/heavy_keys_decomp.py, fresh DataFrame per rep) read
-    part (ratio 30) 2.97 -> 1.16 s, customer legs (ratios 10 / 6.7)
-    1.16 -> 0.82 / 1.51 -> 0.75 s, but orders (ratio 4, 15M keys)
+    (probe heavy_keys_decomp, BASELINE.md "Retired probes", fresh DataFrame per
+    rep) read part (ratio 30) 2.97 -> 1.16 s, customer legs (ratios 10
+    / 6.7) 1.16 -> 0.82 / 1.51 -> 0.75 s, but orders (ratio 4, 15M keys)
     4.28 -> 7.61 s — the single-threaded hashed-relation build
     overtakes the shuffle saving, so the ratio gate keeps that leg on
     the SMJ. Both gates are footer metadata (no job); ratios are fixed

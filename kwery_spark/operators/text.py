@@ -39,10 +39,10 @@ def _contracted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # PLAIN localCheckpoint on purpose (r16): capture (catalog.lckpt,
         # the AQE-off snap) was tried here and REGRESSED the trio — tfidf
         # 3.29->3.68 s, rake 1.69->3.77 s, pmi 3.52->4.42 s at sf10
-        # (tools/probes/capture_scope_ab.py) — the contracted frame is
-        # |distinct texts| small, so the re-exchange it saves downstream
-        # is cheaper than what the corpus-wide groupBy(text) build loses
-        # without AQE.
+        # (probe capture_scope_ab, BASELINE.md "Retired probes") — the
+        # contracted frame is |distinct texts| small, so the re-exchange
+        # it saves downstream is cheaper than what the corpus-wide
+        # groupBy(text) build loses without AQE.
         docs = table(spark, sf_dir, "documents")
         return docs.groupBy("text").agg(F.count(F.lit(1)).alias("m")).localCheckpoint(
             eager=True
@@ -107,9 +107,9 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_ids are distinct rows, so this IS count(DISTINCT doc_id)). The
     contracted arm shuffles the corpus ONCE (groupBy(text) for
     multiplicities); tf/df/score/window all run on the
-    |distinct texts|-sized checkpoint. Fresh-session A/B at sf10
-    (tools/probes/text_contract_decomp.py): 20.06 -> 3.41 s (-83%), all
-    500k output rows identical. Raw arm unchanged — on a mostly-distinct
+    |distinct texts|-sized checkpoint. Fresh-session A/B at sf10 (probe
+    text_contract_decomp, BASELINE.md "Retired probes"): 20.06 -> 3.41 s (-83%),
+    all 500k output rows identical. Raw arm unchanged — on a mostly-distinct
     corpus the text-keyed shuffle + re-expansion buys nothing
     (similarity.py gate doctrine, threshold 2.0).
 
@@ -865,8 +865,8 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|docs| rows x 5 ints, tiny), and n_docs/avgdl/df all come from one
     1-row aggregate over that checkpoint (broadcast). Scoring is then a
     map-side expression; top-20 fuses to TakeOrderedAndProject.
-    Measured fresh-JVM at sf3 (tools/probes/bm25_decomp.py): full key
-    2.73 -> 1.70 s, 10 jobs -> 5; values identical (probe asserts).
+    Measured fresh-JVM at sf3 (probe bm25_decomp, BASELINE.md "Retired probes"):
+    full key 2.73 -> 1.70 s, 10 jobs -> 5; values identical (probe asserts).
     Alternatives measured and rejected: length/replace token-count
     arithmetic (no split at all) 3.2 s — four replace passes over the
     text cost more than one split+explode; pre-filtering the explode to
@@ -1003,8 +1003,8 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears on any corpus). Under the r15 text clone gate
     (``similarity._use_contraction``), the scan side additionally contracts
     to distinct texts first — the regex split runs once per distinct
-    text, weighted by multiplicity. Fresh-session A/B at sf10
-    (tools/probes/text_contract_decomp.py): 38.8 s (old two-pass) →
+    text, weighted by multiplicity. Fresh-session A/B at sf10 (probe
+    text_contract_decomp, BASELINE.md "Retired probes"): 38.8 s (old two-pass) →
     6.09 s (phrase contraction) → 1.48 s (with text contraction), top-15
     identical on all three arms. The word table stays vocabulary-sized
     (AQE broadcasts it); nothing quadratic, no Python on the data path."""
@@ -1121,8 +1121,9 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles the corpus once (groupBy(text)); the (text, word) distinct
     rides the checkpoint partitioning exchange-free, and the pair
     self-join blocks on text over |distinct texts| rows. Fresh-session
-    A/B at sf10 (tools/probes/text_contract_decomp.py): 19.75 →
-    2.92 s (-85%), top-30 identical. Raw arm unchanged below the gate."""
+    A/B at sf10 (probe text_contract_decomp, BASELINE.md "Retired probes"):
+    19.75 → 2.92 s (-85%), top-30 identical. Raw arm unchanged below
+    the gate."""
     docs = table(spark, sf_dir, "documents")
     if _use_contraction(spark, sf_dir, "documents"):
         contr = _contracted_docs(spark, sf_dir)

@@ -294,8 +294,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (s_suppkey, s_nationkey) map (16B) broadcast under the
     catalog.broadcast_fits footer gate (plain joins past it — degrades,
     never OOMs), leaving the orderkey SMJ as the only lineitem
-    exchange. Fresh-JVM A/B at sf10, sweep confs
-    (tools/probes/heavy_keys_decomp.py): 7.68 -> 3.51 s (-54%);
+    exchange. Fresh-JVM A/B at sf10, sweep confs (probe
+    heavy_keys_decomp, BASELINE.md "Retired probes"): 7.68 -> 3.51 s (-54%);
     sum_profit max relative diff 4.6e-16 (pure addend-reorder ulp of a
     double sum, equal at the driver hash's 6 significant digits — the
     same lottery both engines already draw from under free aggregation
@@ -649,8 +649,8 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique, so inner == the old semi). Quantities are integral-valued
     doubles, so both sums are exact in FP and the values are
     bit-identical (probe-asserted). Fresh-JVM A/B at sf10, sweep confs
-    (tools/probes/heavy_keys_decomp.py): 8.84 -> 5.50 s (-38%), 100
-    rows identical. ORDER BY+LIMIT 100 still fuses to
+    (probe heavy_keys_decomp, BASELINE.md "Retired probes"): 8.84 -> 5.50 s
+    (-38%), 100 rows identical. ORDER BY+LIMIT 100 still fuses to
     TakeOrderedAndProject; the orderkey tie-break pins the cutoff.
 
     r16 (VERDICT r15 #6): the LIMIT 100 moves BELOW the customer join.
@@ -668,8 +668,8 @@ def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a bare customer scan: both custkey exchanges (qualifying
     orders AND the full customer table — 4.5M rows at sf30) vanish.
     A terminal <=100-row sort restores the output order contract.
-    Fresh-JVM A/B at sf10 (tools/probes/q18_limit_first.py): 7.86 ->
-    6.14 s best-of-3, 100 rows value-identical; plan 8 -> 6 Exchange,
+    Fresh-JVM A/B at sf10 (probe q18_limit_first, BASELINE.md "Retired probes"):
+    7.86 -> 6.14 s best-of-3, 100 rows value-identical; plan 8 -> 6 Exchange,
     4 -> 2 SortMergeJoin (plans/r16/q18_large_volume_{before,after}.txt,
     sweep confs at sf10).
     """

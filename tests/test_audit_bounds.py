@@ -5,13 +5,8 @@ a regression."""
 
 from __future__ import annotations
 
-import sys
-
 import pyspark.sql.functions as F
 from pyspark.sql.functions import broadcast
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
 
 from audit_plans import BNLJ_BUILD_ROW_BOUND, audit, bnlj_build_rows
 
@@ -69,7 +64,7 @@ def test_undeclared_empty_is_a_sweep_failure():
     assert not empty_is_declared("dedup_exact", "/x/.data/sf30")
     # dir-name parsing; non-canonical dirs fail LOUDLY instead of
     # silently reading as SF 0 (r9 review)
-    assert sf_of("/root/repo/.data/sf10/") == 10.0
+    assert sf_of("/x/.data/sf10/") == 10.0
     assert sf_of("/root/testdata/sf0.01") == 0.01
     import pytest
 

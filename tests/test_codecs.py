@@ -9,14 +9,11 @@ alignment, and magic-byte container sniffing.
 from __future__ import annotations
 
 import struct
-import sys
 import zlib
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from kwery_spark.operators.multimodal import (
     _decode_real,

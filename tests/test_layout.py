@@ -142,3 +142,22 @@ def test_scratch_roots_under_package_parent():
     } <= set(roots)
     for name, value in roots.items():
         assert os.path.commonpath([parent, os.path.abspath(value)]) == parent, name
+
+
+def test_no_tracked_python_file_names_the_checkout_root():
+    # Every root derives from __file__, so a copy of the checkout at
+    # another path runs and tests its own code. perfbench/ changes only
+    # with the benchmark.
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True,
+        check=True,
+    ).stdout.split()
+    named = [
+        f for f in files
+        if not f.startswith("perfbench/")
+        and root in open(os.path.join(root, f), encoding="utf-8").read()
+    ]
+    assert named == []

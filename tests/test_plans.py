@@ -383,7 +383,8 @@ def test_bitmap_distinct_two_bounded_shuffles(spark, sf_dir):
 def test_profile_table_single_scan(spark, sf_dir):
     # r16 REVERSAL of the r5 one-pass lock: the single multi-distinct
     # aggregate planned an Expand x7 (rows x columns through the partial
-    # agg — ~30 s of the 37 s sf30 key, tools/probes/profile_decomp.py);
+    # agg — ~30 s of the 37 s sf30 key, probe profile_decomp,
+    # BASELINE.md "Retired probes");
     # the profile now runs one single-distinct aggregate PER column.
     # Lock the new shape: exactly 6 parquet scans, each pruned to ONE
     # column, and no Expand anywhere (also locked in test_r16_ops).

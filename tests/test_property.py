@@ -14,15 +14,12 @@ max_examples locally to fuzz harder.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo/tools")
-from check import norm_rows  # noqa: E402
+from check import norm_rows
 
 KEYS = st.integers(min_value=0, max_value=5)
 STRS = st.one_of(st.none(), st.sampled_from(["x", "y", "z", ""]))

@@ -132,6 +132,6 @@ def test_dq_ri_ratio_gated_broadcasts(spark):
     # The orders leg carries no explicit hint (ratio 4 < 6) — at
     # sf0.001 Catalyst still broadcasts it on its own size estimate, so
     # the shuffle fallback is only visible at scale: the sf10 probe
-    # (tools/probes/heavy_keys_decomp.py) and the captured
+    # (probe heavy_keys_decomp, BASELINE.md "Retired probes") and the captured
     # plans/r15/dq_referential_integrity_after.txt show that leg as the
     # single remaining SortMergeJoin LeftAnti.

@@ -110,13 +110,6 @@ def test_lckpt_captures_partitioning_under_aqe(spark):
         plain = fresh_base().localCheckpoint(eager=True)
         assert plain.rdd.getNumPartitions() > 1
         assert consumer_plan(plain).count("Exchange") >= 1, consumer_plan(plain)
-        # the kill switch restores the old (uncaptured) behavior for A/B
-        spark.conf.set("spark.kwery.ckpt.capture", "false")
-        try:
-            uncaptured = lckpt(fresh_base())
-            assert consumer_plan(uncaptured).count("Exchange") >= 1
-        finally:
-            spark.conf.set("spark.kwery.ckpt.capture", "true")
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # AQE conf is restored after every snap
@@ -128,8 +121,8 @@ def test_profile_table_no_expand(spark):
     as per-column single-distinct aggregates — the multi-distinct
     Expand (x7 row multiplication through the partial aggregate, ~30 s
     of the 37 s sf30 key) must never regrow. Decomposition + A/B:
-    tools/probes/profile_decomp.py (sf30 old 38.9 -> new 10.28 s,
-    values exactly equal)."""
+    probe profile_decomp, BASELINE.md "Retired probes" (sf30 old 38.9 -> new
+    10.28 s, values exactly equal)."""
     from kwery_spark.plans.inspect import formatted_plan
 
     plan = formatted_plan(QUERIES["profile_table"](spark, SF001))

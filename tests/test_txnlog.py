@@ -10,13 +10,10 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import threading
 
 import pyspark.sql.functions as F
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from kwery_spark.sources.txnlog import ConflictError, TxnLogTable
 

@@ -29,9 +29,10 @@ Exit code 1 if any UNDECLARED flag fires — suitable as a CI gate.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from kwery_spark.session import get_spark

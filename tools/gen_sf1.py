@@ -26,7 +26,8 @@ fingerprint of the SOURCE corpus — when the driver regenerates
 instead of being silently reused.
 
 Usage: python tools/gen_sf1.py [--src /root/testdata/sf0.1] [--out .data/sf1]
-Library: ensure_sf1(src, out) -> out (no-op when fresh), used by bench.py.
+Library: ensure_scaled(src, out, factor) -> out (no-op when fresh), used by
+bench.py and perfbench.
 """
 
 from __future__ import annotations
@@ -36,11 +37,10 @@ import hashlib
 import json
 import os
 import shutil
-import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FACTOR = 10
 
@@ -100,11 +100,7 @@ def _src_fingerprint(src: str) -> str:
     return hashlib.md5(repr(stats).encode()).hexdigest()[:12]
 
 
-def ensure_scaled(
-    src: str = "/root/testdata/sf0.1",
-    out: str = "/root/repo/.data/sf1",
-    factor: int = FACTOR,
-) -> str:
+def ensure_scaled(src: str, out: str, factor: int = FACTOR) -> str:
     """Generate (or reuse, if the source fingerprint matches) a
     factor-x key-shifted corpus at ``out``. Returns ``out``."""
     # v2: shift constants are max+1 (disjoint replica key ranges). The
@@ -152,14 +148,10 @@ def ensure_scaled(
     return out
 
 
-def ensure_sf1(src: str = "/root/testdata/sf0.1", out: str = "/root/repo/.data/sf1") -> str:
-    return ensure_scaled(src, out, FACTOR)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.data/sf1")
+    ap.add_argument("--out", default=os.path.join(_ROOT, ".data", "sf1"))
     ap.add_argument("--factor", type=int, default=FACTOR)
     args = ap.parse_args()
     out = ensure_scaled(args.src, args.out, args.factor)

@@ -4,7 +4,7 @@ TIMEOUT rows instead of silent multi-minute hangs (two were found and
 fixed this way in round 5 — dedup_fuzzy_names and dedup_lsh_recall_eval
 ran >9 min at sf1 before their rewrites).
 
-Usage: python tools/scale_sweep.py [--sf /root/repo/.data/sf1]
+Usage: python tools/scale_sweep.py [--sf .data/sf1]
                                    [--budget 60] [--json OUT]
                                    [--no-isolate] [key ...]
 
@@ -40,7 +40,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 # Structurally-empty declarations (VERDICT r8 item 5): keys whose 0-row
 # result at scale SFs is BY CONSTRUCTION, not a bug — declared here with
@@ -83,8 +84,46 @@ def empty_is_declared(key: str, sf_dir: str) -> bool:
     return sf_of(sf_dir) >= EXPECTED_EMPTY_AT.get(key, float("inf"))
 
 
+def sweep_confs(sf_dir: str) -> dict[str, int]:
+    """The sweep's session sizing for the corpus at ``sf_dir``, read from
+    the lineitem footer (no Spark job).
+
+    Shuffle parallelism scales with the corpus exactly as a cluster
+    deployment (and bench.py _prep) sizes it — the CLAUDE.md sizing rule:
+    partitions must fit in executor memory at the target SF. The session
+    default of 8 is right at sf<=1 but forces ~22M-row reducers at sf30,
+    and the resulting sort/agg spill is superlinear: q16 measured 90.4 s
+    at 8 partitions vs 47.8 s at 64 (identical plan, fresh JVM each,
+    r12). Recorded in the sweep JSON _meta so cross-round totals are
+    compared under known conditions.
+
+    Scan split sizing (r12, two measured failure modes with one knob): a
+    flat 2 MB maxPartitionBytes gives the sf30 lineitem 653 map tasks
+    whose 64-reducer shuffle-block explosion doubles the join-heavy keys
+    (q14 24.6 s vs 11.4 s at 16 MB), while a flat 16 MB collapses the
+    4 MB documents file to 2 splits and starves the per-byte-expensive
+    text/HOF keys of cores (text_rake 54.9 s vs 29.4 s at 2 MB). Spark's
+    own split formula — split = min(maxPartitionBytes,
+    max(openCostInBytes, bytes/minPartitionNum)) — serves both classes
+    once minPartitionNum targets 2x cores and the openCost floor is
+    small: big tables cap at 16 MB splits, small-but-expensive tables
+    split to ~64 pieces. Measured sf10: documents 35 splits / lineitem
+    82; text_rake 18.3 s, q14 2.8 s — better than EITHER flat setting.
+    """
+    import pyarrow.parquet as _pq
+
+    li_rows = _pq.ParquetFile(
+        os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
+    return {
+        "spark.sql.shuffle.partitions": int(min(64, max(8, li_rows // 500_000))),
+        "spark.sql.files.maxPartitionBytes": 16 << 20,
+        "spark.sql.files.minPartitionNum": 64,
+        "spark.sql.files.openCostInBytes": 128 << 10,
+    }
+
+
 def _parse_args(argv: list[str]) -> tuple[str, float, str | None, bool, list[str]]:
-    sf_dir = "/root/repo/.data/sf1"
+    sf_dir = os.path.join(_ROOT, ".data", "sf1")
     budget = 60.0
     out_json = None
     isolate = True
@@ -121,36 +160,8 @@ def _run_inline(sf_dir: str, budget: float, keys: list[str]) -> dict[str, dict]:
     spark = get_spark("scale-sweep")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
-    # Size shuffle parallelism to the corpus exactly as a cluster
-    # deployment (and bench.py _prep) does — the CLAUDE.md sizing rule:
-    # partitions must fit in executor memory at the target SF. The
-    # session default of 8 is right at sf<=1 but forces ~22M-row
-    # reducers at sf30, and the resulting sort/agg spill is superlinear:
-    # q16 measured 90.4 s at 8 partitions vs 47.8 s at 64 (identical
-    # plan, fresh JVM each, r12). Recorded in the sweep JSON _meta so
-    # cross-round totals are compared under known conditions.
-    import pyarrow.parquet as _pq
-
-    li_path = os.path.join(sf_dir, "lineitem.parquet")
-    li_rows = _pq.ParquetFile(li_path).metadata.num_rows
-    n_shuffle = int(min(64, max(8, li_rows // 500_000)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
-    # Scan split sizing (r12, two measured failure modes with one knob):
-    # a flat 2 MB maxPartitionBytes gives the sf30 lineitem 653 map
-    # tasks whose 64-reducer shuffle-block explosion doubles the
-    # join-heavy keys (q14 24.6 s vs 11.4 s at 16 MB), while a flat
-    # 16 MB collapses the 4 MB documents file to 2 splits and starves
-    # the per-byte-expensive text/HOF keys of cores (text_rake 54.9 s
-    # vs 29.4 s at 2 MB). Spark's own split formula — split =
-    # min(maxPartitionBytes, max(openCostInBytes, bytes/minPartitionNum))
-    # — serves both classes once minPartitionNum targets 2x cores and
-    # the openCost floor is small: big tables cap at 16 MB splits,
-    # small-but-expensive tables split to ~64 pieces. Measured sf10:
-    # documents 35 splits / lineitem 82; text_rake 18.3 s, q14 2.8 s —
-    # better than EITHER flat setting.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 20))
-    spark.conf.set("spark.sql.files.minPartitionNum", "64")
-    spark.conf.set("spark.sql.files.openCostInBytes", str(128 << 10))
+    for k, v in sweep_confs(sf_dir).items():
+        spark.conf.set(k, str(v))
     import kwery_spark.all_ops  # noqa: F401
     from kwery_spark.registry import QUERIES
 
@@ -305,20 +316,16 @@ def main() -> None:
     print(f"\n{len(results) - total_bad}/{len(results)} within budget "
           f"({budget:.0f}s each)", flush=True)
     if out_json:
-        # The conf values in _meta mirror what _run_inline sets in every
-        # child session (children recompute n_shuffle from the same
-        # lineitem footer, so the value is identical across groups).
-        import pyarrow.parquet as _pq
-
-        li_rows = _pq.ParquetFile(
-            os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
+        # Children compute the same sizing from the same lineitem footer,
+        # so these values hold for every group.
+        confs = sweep_confs(sf_dir)
         meta = {
             "sf_dir": sf_dir,
             "isolation": "per-module" if isolate else "none",
-            "shuffle_partitions": int(min(64, max(8, li_rows // 500_000))),
-            "max_partition_bytes": 16 << 20,
-            "min_partition_num": 64,
-            "open_cost_bytes": 128 << 10,
+            "shuffle_partitions": confs["spark.sql.shuffle.partitions"],
+            "max_partition_bytes": confs["spark.sql.files.maxPartitionBytes"],
+            "min_partition_num": confs["spark.sql.files.minPartitionNum"],
+            "open_cost_bytes": confs["spark.sql.files.openCostInBytes"],
             "n_keys": len(results),
             "n_bad": total_bad,
             "total_sec": round(sum(v["sec"] for v in results.values()), 1),
