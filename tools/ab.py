@@ -4,7 +4,7 @@ new JVM per arm and rep, and assert every arm returns the same values.
 Usage: python tools/ab.py [--sf DIR] [--prep] [--keys a,b] [--reps N]
                           --arm NAME[:k=v,...] --arm ...
 
---sf DIR   corpus dir (default /root/testdata/sf0.1)
+--sf DIR   corpus dir (default: bench.py's sf0.1 corpus)
 --prep     run the bench.py offline prep first (bench._prep) so the
            experiment measures the same storage/catalog state and confs
            as the real bench; the arm's confs are re-applied after it.
