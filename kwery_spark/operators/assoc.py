@@ -86,13 +86,11 @@ def assoc_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join preserves it (broadcast residuals never destroy the bucket
     # distribution — they sit between scan and agg here, not between a
     # zipper's legs, so the r9 q5 trap does not apply). Raw fallback for
-    # layout-less sessions (sweeps grade raw corpora on purpose); same
-    # spark.kwery.bucketed kill switch as _pair_weights/_maybe_bucketed.
+    # layout-less sessions (sweeps grade raw corpora on purpose) and
+    # under the spark.kwery.bucketed kill switch (catalog.bucketed_db).
     from kwery_spark.catalog import bucketed_db, bucketed_table
 
-    bdb = None
-    if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() != "false":
-        bdb = bucketed_db(spark, sf_dir)
+    bdb = bucketed_db(spark, sf_dir)
     if bdb is not None:
         li = bucketed_table(spark, bdb, "lineitem").select(
             "l_orderkey", "l_partkey"

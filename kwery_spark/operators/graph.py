@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import _SCRATCH, memo, table
+from kwery_spark.catalog import memo, table
 from kwery_spark.registry import register
 
 _D = 0.85  # damping
@@ -58,36 +58,16 @@ def _ckpt(df: DataFrame) -> DataFrame:
     r16: materialized via _snap_captured, so consumers actually see the
     stored partitioning/ordering."""
     import os
-    import shutil
+
+    from kwery_spark.sources.scans import pid_dir
 
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        root = os.path.join(_SCRATCH, "checkpoints")
-        os.makedirs(root, exist_ok=True)
         # Reliable checkpoints are only auto-cleaned while the context
-        # lives (cleanCheckpoints GC hook, set in session.py); whatever a
-        # dead session left behind stays forever (ADVICE r5: GB-scale
-        # leakage across gate/bench/sweep runs). Same dead-pid discipline
-        # as the warehouse fixtures: each process checkpoints under
-        # pid<pid>/, and any sibling whose pid fails kill(pid, 0) is swept
-        # here. Legacy bare-UUID dirs (pre-r6 layout) can't be attributed
-        # to a live process and are swept too.
-        for entry in os.listdir(root):
-            stale = False
-            if entry.startswith("pid") and entry[3:].isdigit():
-                pid = int(entry[3:])
-                if pid != os.getpid():
-                    try:
-                        os.kill(pid, 0)
-                    except ProcessLookupError:
-                        stale = True
-                    except PermissionError:
-                        pass  # alive but owned by another user — keep
-            else:
-                stale = True  # pre-r6 bare UUID dir: owner unknowable
-            if stale:
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-        base = os.path.join(root, f"pid{os.getpid()}")
+        # lives (cleanCheckpoints GC hook, set in session.py); a dead
+        # session's checkpoints go with its pid dir (ADVICE r5: GB-scale
+        # leakage across gate/bench/sweep runs).
+        base = pid_dir("checkpoints", "ckpt")
         os.makedirs(base, exist_ok=True)
         sc.setCheckpointDir(base)
     return _snap_captured(df, lambda d: d.checkpoint(eager=True))
@@ -110,9 +90,7 @@ def _pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arm's checkpoint (rows are identical either way).
     from kwery_spark.catalog import bucketed_db, bucketed_table
 
-    bdb = None
-    if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() != "false":
-        bdb = bucketed_db(spark, sf_dir)
+    bdb = bucketed_db(spark, sf_dir)
 
     def build() -> DataFrame:
         # r14 (VERDICT r13 item 4): when the orderkey-bucketed warehouse
@@ -122,8 +100,8 @@ def _pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 58.7 s (raw scans, both sides shuffled) → 42.1 s (zipper), rows
         # identical (176,061,300). At 100 TB this is the co-located fact
         # layout every warehouse keeps anyway. Raw fallback otherwise (the
-        # sweep protocol reads raw corpora); same kill switch as
-        # tpch._maybe_bucketed. Measured non-levers for the raw arm, so the
+        # sweep protocol reads raw corpora; catalog.bucketed_db holds the
+        # kill switch). Measured non-levers for the raw arm, so the
         # next reader doesn't re-chase them: spark.checkpoint.compress
         # shrinks the 8.3 GB checkpoint 7.5x but costs ~+5 s write for
         # ~-1.1 s/read (two interleaved A/B pairs — null for a single-key

@@ -981,15 +981,9 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     data; the JSONL roundtrip exercises schema-carrying text I/O."""
     import os as _os
 
-    from kwery_spark.sources.scans import SCRATCH, _scratch, sweep_dead_pid_dirs
+    from kwery_spark.sources.scans import pid_dir
 
-    # full-corpus-text exports from dead sessions must not accumulate
-    # (ADVICE r5) — same dead-pid sweep as warehouse_snapshot_diff
-    sweep_dead_pid_dirs(_os.path.join(SCRATCH, "training_shards"))
-    out = _scratch(
-        "training_shards",
-        f"{_os.path.basename(sf_dir.rstrip('/'))}_pid{_os.getpid()}",
-    )
+    out = pid_dir("training_shards", _os.path.basename(sf_dir.rstrip("/")))
     docs = table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 100)
     sharded = docs.select(
         "doc_id",

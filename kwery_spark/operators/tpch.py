@@ -24,11 +24,6 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> str | None:
     falls through to the hand plans over raw files."""
     if not cbo_active(spark):
         return None
-    # experiment kill-switch (a tools/ab.py arm):
-    # spark.kwery.bucketed=false measures the hand plans with the
-    # bucketed build present but unused
-    if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() == "false":
-        return None
     return bucketed_db(spark, sf_dir)
 
 

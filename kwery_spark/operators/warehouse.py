@@ -386,37 +386,13 @@ def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; the oracle recomputes both versions from the source."""
     import os as _os
 
-    from kwery_spark.sources.scans import SCRATCH
+    from kwery_spark.sources.scans import pid_dir
     from kwery_spark.sources.snapshot import (
         read_snapshot,
         write_audit_publish,
     )
 
-    parent = _os.path.join(SCRATCH, "snapshot_diff")
-    # opportunistic dead-session sweep (txnlog._fixture_root pattern): a
-    # pid that fails kill(pid, 0) cannot be using its fixture dir
-    try:
-        for entry in _os.listdir(parent):
-            pid_part = entry.rsplit("_pid", 1)
-            if len(pid_part) == 2 and pid_part[1].isdigit():
-                pid = int(pid_part[1])
-                if pid != _os.getpid():
-                    try:
-                        _os.kill(pid, 0)
-                    except ProcessLookupError:
-                        import shutil as _shutil
-
-                        _shutil.rmtree(
-                            _os.path.join(parent, entry), ignore_errors=True
-                        )
-                    except PermissionError:
-                        pass
-    except FileNotFoundError:
-        pass
-    root = _os.path.join(
-        parent,
-        f"{_os.path.basename(sf_dir.rstrip('/'))}_pid{_os.getpid()}",
-    )
+    root = pid_dir("snapshot_diff", _os.path.basename(sf_dir.rstrip("/")))
     _os.makedirs(root, exist_ok=True)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"

@@ -244,14 +244,19 @@ def _cds_options() -> str | None:
     return f"-XX:ArchiveClassesAtExit={archive}_pid{os.getpid()} {_CDS_QUIET}"
 
 
+def default_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on (unlike
+    os.cpu_count, this honors the CPU affinity mask), so local[N] fits
+    the box."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSession.Builder:
     # before the sweep, which deletes recordings whose process is dead
     cds = _cds_options()
     _sweep_scratch_once()
     if cpus is None:
-        # the cores this process may run on (unlike os.cpu_count, this
-        # honors the CPU affinity mask), so local[N] fits the box
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+        cpus = default_cpus()
     b = SparkSession.builder
     if cds:
         b = b.config("spark.driver.extraJavaOptions", cds)
@@ -284,7 +289,7 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         .config("spark.locality.wait", "0")
         # Reliable checkpoints (graph.py _ckpt iterative edge sets) are
         # deleted when their RDD is GC'd instead of leaking until the
-        # pid-sweep in _ckpt catches the dead session (ADVICE r5).
+        # dead-pid sweep (scans.pid_dir) catches the dead session (ADVICE r5).
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Arrow for any toPandas()/collect of results and for pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

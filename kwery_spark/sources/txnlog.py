@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kwery_spark.catalog import table
 from kwery_spark.registry import register
-from kwery_spark.sources.scans import SCRATCH
+from kwery_spark.sources.scans import pid_dir
 
 
 class ConflictError(Exception):
@@ -84,16 +84,11 @@ class TxnLogTable:
         return max(versions) if versions else None
 
     def entry(self, version: int) -> dict:
-        """Commit metadata for one log version — the public read surface
-        for change-feed consumers (operation, add/remove dir lists,
-        base_version). ADVICE r9: stream_cdc_* consumed the private
-        _entry, coupling operators to log-internal layout; this is the
-        supported accessor."""
+        """Commit metadata for one log version (operation, add/remove dir
+        lists, base_version) — the read surface for log replay and
+        change-feed consumers."""
         with open(os.path.join(self.log_dir, f"{version:08d}.json")) as f:
             return json.load(f)
-
-    # internal alias kept for log plumbing call sites
-    _entry = entry
 
     def live_dirs(self, version: int | None = None) -> list[str]:
         """Replay commits 0..version → the data directories that
@@ -121,7 +116,7 @@ class TxnLogTable:
             live = list(cp["live"])
             start = cp["version"] + 1
         for i in range(start, v + 1):
-            e = self._entry(i)
+            e = self.entry(i)
             removed = set(e.get("remove", []))
             live = [d for d in live if d not in removed]
             live.extend(e.get("add", []))
@@ -243,29 +238,10 @@ def _txn_root(sf_dir: str, name: str) -> str:
     """Per-process fixture root (ADVICE r4): the r4 root was keyed only by
     sf basename, so two concurrent check sessions running the same key
     rmtree'd each other's _log mid-protocol — the same cross-process race
-    class scans._stage_once fixed with flock. A pid suffix makes live
+    class scans._stage_once fixed with flock. A pid dir makes live
     sessions disjoint (no lock needed: the fixture is private state, not
-    a shared stage); dead sessions' dirs are swept opportunistically —
-    a pid that fails os.kill(pid, 0) cannot be using its dir."""
-    parent = os.path.join(SCRATCH, "txnlog", name)
-    try:
-        for entry in os.listdir(parent):
-            pid_part = entry.rsplit("-pid", 1)
-            if len(pid_part) == 2 and pid_part[1].isdigit():
-                pid = int(pid_part[1])
-                if pid != os.getpid():
-                    try:
-                        os.kill(pid, 0)
-                    except ProcessLookupError:
-                        shutil.rmtree(
-                            os.path.join(parent, entry), ignore_errors=True
-                        )
-                    except PermissionError:
-                        pass  # pid alive under another uid — leave it
-    except FileNotFoundError:
-        pass
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(parent, f"{base}-pid{os.getpid()}")
+    a shared stage)."""
+    return pid_dir("txnlog", f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
 @register(

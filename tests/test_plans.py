@@ -387,7 +387,7 @@ def test_profile_table_single_scan(spark, sf_dir):
     # BASELINE.md "Retired probes");
     # the profile now runs one single-distinct aggregate PER column.
     # Lock the new shape: exactly 6 parquet scans, each pruned to ONE
-    # column, and no Expand anywhere (also locked in test_r16_ops).
+    # column, and no Expand anywhere.
     df = _q("profile_table")(spark, sf_dir)
     plan = inspect.formatted_plan(df)
     import re as _re

@@ -115,15 +115,3 @@ def test_lckpt_captures_partitioning_under_aqe(spark):
     # AQE conf is restored after every snap
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
-
-def test_profile_table_no_expand(spark):
-    """r16 (VERDICT r15 #4): profile_table's 6 exact countDistincts run
-    as per-column single-distinct aggregates — the multi-distinct
-    Expand (x7 row multiplication through the partial aggregate, ~30 s
-    of the 37 s sf30 key) must never regrow. Decomposition + A/B:
-    probe profile_decomp, BASELINE.md "Retired probes" (sf30 old 38.9 -> new
-    10.28 s, values exactly equal)."""
-    from kwery_spark.plans.inspect import formatted_plan
-
-    plan = formatted_plan(QUERIES["profile_table"](spark, SF001))
-    assert "Expand" not in plan, plan[:2000]

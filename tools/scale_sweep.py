@@ -107,17 +107,21 @@ def sweep_confs(sf_dir: str) -> dict[str, int]:
     max(openCostInBytes, bytes/minPartitionNum)) — serves both classes
     once minPartitionNum targets 2x cores and the openCost floor is
     small: big tables cap at 16 MB splits, small-but-expensive tables
-    split to ~64 pieces. Measured sf10: documents 35 splits / lineitem
-    82; text_rake 18.3 s, q14 2.8 s — better than EITHER flat setting.
+    split to ~2x cores pieces. Measured sf10 on 32 cores (64): documents
+    35 splits / lineitem 82; text_rake 18.3 s, q14 2.8 s — better than
+    EITHER flat setting. The cores are the session's own
+    (session.default_cpus), so the target follows the box.
     """
     import pyarrow.parquet as _pq
+
+    from kwery_spark.session import default_cpus
 
     li_rows = _pq.ParquetFile(
         os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
     return {
         "spark.sql.shuffle.partitions": int(min(64, max(8, li_rows // 500_000))),
         "spark.sql.files.maxPartitionBytes": 16 << 20,
-        "spark.sql.files.minPartitionNum": 64,
+        "spark.sql.files.minPartitionNum": 2 * default_cpus(),
         "spark.sql.files.openCostInBytes": 128 << 10,
     }
 
