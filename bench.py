@@ -263,7 +263,12 @@ def _measure_duckdb(
 
 
 def _prep(spark, sf_dir: str) -> None:
-    from kwery_spark.catalog import build_bucketed, optimize_layout
+    from kwery_spark.catalog import (
+        build_bucketed,
+        optimize_layout,
+        parquet_rows,
+        shuffle_partitions,
+    )
 
     optimize_layout(spark, sf_dir)
     # Step 2 of the offline maintenance: orders+lineitem hash-bucketed on
@@ -279,12 +284,8 @@ def _prep(spark, sf_dir: str) -> None:
     # shuffle volume grows — measured at sf10: 22.0 s with 8 partitions
     # vs 14.7 s with 32 (fresh JVM, same protocol). Footer-metadata row
     # count, no job.
-    import pyarrow.parquet as _pq
-
-    rows = _pq.ParquetFile(os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(64, max(8, rows // 500_000)))
-    )
+    rows = parquet_rows(sf_dir, "lineitem")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(rows)))
     # Broadcast threshold scales with the corpus (measured fresh-JVM, r6):
     # at sf10 lifting the session's stat-less 1 MB guard to 32 MB turns
     # the 300k-key customer semi-join side into a planner-time broadcast

@@ -31,5 +31,5 @@ from kwery_spark.operators import (
     windows,
 )
 from kwery_spark.functions import families
-from kwery_spark.sources import scans, snapshot, txnlog
+from kwery_spark.sources import scans, txnlog
 from kwery_spark.streaming import live, windows as stream_windows

@@ -55,7 +55,7 @@ def memo(spark: SparkSession, sf_dir: str, tables, name: str, build=None):
     session and corpus.
 
     The key is (applicationId, realpath(sf_dir), the
-    ``scans._corpus_fingerprint`` of each table in ``tables``, name).
+    ``_corpus_fingerprint`` of the tables in ``tables``, name).
     applicationId is unique per SparkContext (unlike id(spark), which
     CPython reuses), so a stopped session's plans and checkpoint RDDs
     never reach a new one. The fingerprints make a regenerated corpus at
@@ -72,12 +72,8 @@ def memo(spark: SparkSession, sf_dir: str, tables, name: str, build=None):
     Single-threaded by contract: every caller (bench, sweep, check,
     perfbench, Engine.run) builds and runs one key at a time, so there
     is no lock."""
-    fps = ()
-    if tables:
-        from kwery_spark.sources.scans import _corpus_fingerprint
-
-        fps = tuple(_corpus_fingerprint(sf_dir, t) for t in tables)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), fps, name)
+    fp = _corpus_fingerprint(sf_dir, tables) if tables else ""
+    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), fp, name)
     hit = _MEMO.get(key)
     if hit is not None:
         _MEMO.move_to_end(key)
@@ -394,19 +390,26 @@ def slim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Short content fingerprint of the raw corpus files ((size, mtime_ns)
-    per table). Both the optimized-layout marker and the catalog database
-    name embed it, so a driver-regenerated corpus (same paths, new data —
-    happens between rounds) can never be served stale rewritten files,
-    schemas, or ANALYZE stats: the old artifacts simply stop being
-    addressed."""
+def _corpus_fingerprint(sf_dir: str, tables=TABLES) -> str:
+    """Short content fingerprint of corpus tables: (entry, size,
+    mtime_ns) of each table's parquet file, or of each entry of a
+    dataset directory. The optimized-layout marker, the bucketed
+    database name, the staged-fixture markers and the session memo key
+    embed it, so a regenerated corpus (same paths, new data) is never
+    served stale rewritten files, stages, schemas or stats: the old
+    artifacts simply stop being addressed."""
     import hashlib
 
     stats = []
-    for name in TABLES:
-        st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-        stats.append((name, st.st_size, st.st_mtime_ns))
+    for name in tables:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(path):
+            for entry in sorted(os.listdir(path)):
+                st = os.stat(os.path.join(path, entry))
+                stats.append((entry, st.st_size, st.st_mtime_ns))
+        else:
+            st = os.stat(path)
+            stats.append((name, st.st_size, st.st_mtime_ns))
     return hashlib.md5(repr(stats).encode()).hexdigest()[:10]
 
 
@@ -475,6 +478,14 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     else:
         files = [path]  # os.stat via ParquetFile raises on a missing file
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def shuffle_partitions(lineitem_rows: int) -> int:
+    """Shuffle parallelism sized from the corpus the way a cluster
+    deployment sizes it: one partition per ~500k lineitem rows, clamped
+    to [8, 64]. Bench prep and the scale sweep set it;
+    ``build_bucketed`` caps it at 32 for the bucket count."""
+    return min(64, max(8, lineitem_rows // 500_000))
 
 
 # r14 (ADVICE r13): the explicit-broadcast gates were row-count based
@@ -672,11 +683,9 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
     # Bucket count scales with the corpus exactly like shuffle
     # parallelism (bench.py _prep): at sf<=1 the default 8 avoids empty
     # buckets; by sf3+ wider buckets keep per-task merge volume flat.
-    import pyarrow.parquet as _pq
     from pyspark.sql import functions as F
 
-    rows = _pq.ParquetFile(os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
-    n_buckets = int(min(32, max(8, rows // 500_000)))
+    n_buckets = min(32, shuffle_partitions(parquet_rows(sf_dir, "lineitem")))
     for name, key in _BUCKETED_TABLES.items():
         full = f"{db}.{name}"
         if spark.catalog.tableExists(full) and _has_row_stats(spark, full):

@@ -341,99 +341,6 @@ def warehouse_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "warehouse_snapshot_diff",
-    oracle="""
-    WITH v1 AS (
-        SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-    ),
-    v2 AS (
-        SELECT c_custkey, c_mktsegment,
-               CASE WHEN c_mktsegment = 'BUILDING' THEN c_acctbal + 100.0
-                    ELSE c_acctbal END AS c_acctbal
-        FROM customer WHERE c_acctbal >= 0
-    )
-    SELECT
-        CAST((SELECT count(*) FROM v2 WHERE c_custkey NOT IN
-              (SELECT c_custkey FROM v1)) AS BIGINT) AS rows_added,
-        CAST((SELECT count(*) FROM v1 WHERE c_custkey NOT IN
-              (SELECT c_custkey FROM v2)) AS BIGINT) AS rows_removed,
-        CAST((SELECT count(*) FROM v1 JOIN v2 USING (c_custkey)
-              WHERE v1.c_acctbal <> v2.c_acctbal
-                 OR v1.c_mktsegment <> v2.c_mktsegment) AS BIGINT)
-            AS rows_changed,
-        CAST((SELECT count(*) FROM v1 JOIN v2 USING (c_custkey)
-              WHERE v1.c_acctbal = v2.c_acctbal
-                AND v1.c_mktsegment = v2.c_mktsegment) AS BIGINT)
-            AS rows_unchanged
-    """,
-)
-def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff — the table-format audit question "what changed
-    between version N and N+1": two snapshot versions are PUBLISHED
-    through the write-audit-publish protocol (v1 = full customer table;
-    v2 = negative balances deleted, BUILDING balances adjusted +100),
-    then both immutable version directories are read back (time travel)
-    and diffed by primary key into added/removed/changed/unchanged
-    counts — the Delta CDF / Iceberg changelog readout, derived from
-    plain snapshots.
-
-    Scale: the diff is one full-outer-shaped comparison keyed on the
-    primary key (here two anti-join counts + one inner join, all
-    shuffling on c_custkey); no driver-side data. The fixture root is
-    per-process (the txnlog concurrent-session lesson, ADVICE r4).
-
-    Determinism: +100.0 on 2-decimal balances is exact; counts are
-    integers; the oracle recomputes both versions from the source."""
-    import os as _os
-
-    from kwery_spark.sources.scans import pid_dir
-    from kwery_spark.sources.snapshot import (
-        read_snapshot,
-        write_audit_publish,
-    )
-
-    root = pid_dir("snapshot_diff", _os.path.basename(sf_dir.rstrip("/")))
-    _os.makedirs(root, exist_ok=True)
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    v2_df = cust.filter(F.col("c_acctbal") >= 0).withColumn(
-        "c_acctbal",
-        F.when(
-            F.col("c_mktsegment") == "BUILDING", F.col("c_acctbal") + 100.0
-        ).otherwise(F.col("c_acctbal")),
-    )
-    assert write_audit_publish(spark, cust, root, 1, cust.count())
-    assert write_audit_publish(spark, v2_df, root, 2, v2_df.count())
-    s1 = read_snapshot(spark, root, 1).alias("v1")
-    s2 = read_snapshot(spark, root, 2).alias("v2")
-    added = s2.join(s1, "c_custkey", "left_anti").agg(
-        F.count(F.lit(1)).alias("rows_added")
-    )
-    removed = s1.join(s2, "c_custkey", "left_anti").agg(
-        F.count(F.lit(1)).alias("rows_removed")
-    )
-    joined = s1.join(s2, "c_custkey")
-    same = (F.col("v1.c_acctbal") == F.col("v2.c_acctbal")) & (
-        F.col("v1.c_mktsegment") == F.col("v2.c_mktsegment")
-    )
-    changed = joined.agg(
-        F.sum(F.when(~same, 1).otherwise(0)).cast("long").alias("rows_changed"),
-        F.sum(F.when(same, 1).otherwise(0)).cast("long").alias("rows_unchanged"),
-    )
-    return (
-        added.join(F.broadcast(removed))
-        .join(F.broadcast(changed))
-        .select(
-            F.col("rows_added").cast("long"),
-            F.col("rows_removed").cast("long"),
-            "rows_changed",
-            "rows_unchanged",
-        )
-    )
-
-
-@register(
     "join_temporal_pit",
     oracle="""
     WITH ordered AS (

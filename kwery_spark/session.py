@@ -255,6 +255,12 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
     # before the sweep, which deletes recordings whose process is dead
     cds = _cds_options()
     _sweep_scratch_once()
+    # Python workers inherit the environment the JVM started with: put
+    # this checkout on their path so a UDF that pickles package code by
+    # reference imports it whatever the working directory.
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if _REPO_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [_REPO_ROOT, *paths]))
     if cpus is None:
         cpus = default_cpus()
     b = SparkSession.builder

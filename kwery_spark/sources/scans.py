@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from kwery_spark.catalog import _SCRATCH, round6, table
+from kwery_spark.catalog import _SCRATCH, _corpus_fingerprint, round6, table
 from kwery_spark.registry import register
 
 # Local scratch for sink round-trips; at cluster scale this would be an
@@ -139,24 +139,6 @@ def sweep_scratch(ttl_hours: float | None = None) -> int:
             except OSError:
                 continue
     return removed
-
-
-def _corpus_fingerprint(sf_dir: str, name: str) -> str:
-    """Cheap content fingerprint of a source table: size + mtime of its
-    parquet file(s). Staged-fixture markers embed this, so a regenerated
-    corpus invalidates the stage instead of silently reusing stale files."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    stats = []
-    if os.path.isdir(path):
-        for entry in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, entry))
-            stats.append((entry, st.st_size, st.st_mtime_ns))
-    else:
-        st = os.stat(path)
-        stats.append((name, st.st_size, st.st_mtime_ns))
-    import hashlib
-
-    return hashlib.md5(repr(stats).encode()).hexdigest()[:12]
 
 
 def _stage_once(data_dir: str, fingerprint: str, write) -> None:
@@ -528,7 +510,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .text(files_dir)
         )
 
-    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, "documents"), write)
+    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, ("documents",)), write)
     doc_id = F.regexp_extract(F.col("path"), r"doc_id=(\d+)/", 1).cast("long")
     return (
         spark.read.format("binaryFile")
@@ -591,7 +573,7 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
             .text(data_dir)
         )
 
-    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, "documents"), write)
+    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, ("documents",)), write)
     schema = "doc_id long, n_chars long, _bad string"
     parsed = (
         spark.read.schema(schema)
@@ -1046,7 +1028,7 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(data_dir)
         )
 
-    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, "events"), write)
+    _stage_once(stage_dir, _corpus_fingerprint(sf_dir, ("events",)), write)
     return (
         spark.read.parquet(data_dir)
         .filter(F.col("user_id").isin(11, 4242))

@@ -19,9 +19,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from kwery_spark.catalog import _SCRATCH, _normalize_ts
+from kwery_spark.catalog import _SCRATCH, _corpus_fingerprint, _normalize_ts
 from kwery_spark.registry import register
-from kwery_spark.sources.scans import _corpus_fingerprint
 
 SCRATCH = os.path.join(_SCRATCH, "streaming")
 
@@ -45,7 +44,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and a driver-provided session may run a streaming key first
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = os.path.join(sf_dir, "events.parquet")
-    fp = _corpus_fingerprint(sf_dir, "events")
+    fp = _corpus_fingerprint(sf_dir, ("events",))
     stage = os.path.join(
         SCRATCH, "events_src", sf_dir.strip("/").replace("/", "_") + "_" + fp
     )

@@ -11,10 +11,12 @@ import ab
 
 
 def test_two_arms_in_fresh_jvms_hash_equal(tmp_path, sf_dir):
-    # cwd outside the checkout: the tool finds its package from __file__
+    # cwd outside the checkout: the tool finds its package from __file__,
+    # and the Python workers of mm_decode_features' mapInPandas find it
+    # through the session's PYTHONPATH
     proc = subprocess.run(
         [sys.executable, ab.__file__, "--sf", sf_dir,
-         "--keys", "q1_pricing_summary", "--reps", "1",
+         "--keys", "q1_pricing_summary,mm_decode_features", "--reps", "1",
          "--arm", "a", "--arm", "b:spark.sql.shuffle.partitions=4"],
         cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )

@@ -82,7 +82,6 @@ def test_sweep_scratch_removes_stale_keeps_live(tmp_path, monkeypatch):
 
     def fixtures() -> dict[str, str]:
         return {
-            "snapshot_diff": scans.pid_dir("snapshot_diff", "sf0.001"),
             "txnlog": txnlog._txn_root("/data/sf0.001", "customers"),
             "checkpoints": scans.pid_dir("checkpoints", "ckpt"),
             "training_shards": scans.pid_dir("training_shards", "sf0.001"),
@@ -143,7 +142,7 @@ def test_scratch_roots_under_package_parent():
 
     import kwery_spark
     from kwery_spark import session
-    from kwery_spark.sources import scans, snapshot, txnlog  # noqa: F401
+    from kwery_spark.sources import scans, txnlog  # noqa: F401
     from kwery_spark.streaming import live  # noqa: F401
 
     parent = os.path.dirname(os.path.dirname(os.path.abspath(kwery_spark.__file__)))
@@ -159,7 +158,6 @@ def test_scratch_roots_under_package_parent():
     assert {
         "kwery_spark.catalog._SCRATCH",
         "kwery_spark.sources.scans.SCRATCH",
-        "kwery_spark.sources.snapshot.SCRATCH",
         "kwery_spark.streaming.live.SCRATCH",
     } <= set(roots)
     for name, value in roots.items():

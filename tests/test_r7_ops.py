@@ -121,17 +121,6 @@ def test_power_mde_scales_with_sqrt_n(spark, sf_dir):
         assert r["n_per_arm_for_5pct"] > 0
 
 
-def test_vacuum_preserves_live_snapshot(spark, sf_dir):
-    rows = QUERIES["warehouse_vacuum_retention"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["n_versions"] == 4
-        assert r["dirs_written"] == 4
-        assert r["dirs_vacuumed"] == 2
-        assert r["dirs_live_latest"] == 1
-        assert r["time_travel_ok"] == 1
-
-
 def test_silhouette_in_unit_interval(spark, sf_dir):
     rows = QUERIES["ml_kmeans_silhouette"](spark, sf_dir).collect()
     assert len(rows) == 8

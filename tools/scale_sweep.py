@@ -112,14 +112,13 @@ def sweep_confs(sf_dir: str) -> dict[str, int]:
     EITHER flat setting. The cores are the session's own
     (session.default_cpus), so the target follows the box.
     """
-    import pyarrow.parquet as _pq
-
+    from kwery_spark.catalog import parquet_rows, shuffle_partitions
     from kwery_spark.session import default_cpus
 
-    li_rows = _pq.ParquetFile(
-        os.path.join(sf_dir, "lineitem.parquet")).metadata.num_rows
     return {
-        "spark.sql.shuffle.partitions": int(min(64, max(8, li_rows // 500_000))),
+        "spark.sql.shuffle.partitions": shuffle_partitions(
+            parquet_rows(sf_dir, "lineitem")
+        ),
         "spark.sql.files.maxPartitionBytes": 16 << 20,
         "spark.sql.files.minPartitionNum": 2 * default_cpus(),
         "spark.sql.files.openCostInBytes": 128 << 10,
