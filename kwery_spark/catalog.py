@@ -7,11 +7,15 @@ filters and prune columns into the vectorized parquet reader per query.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import threading
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,6 +50,7 @@ _OPTIMIZED: dict[str, str] = {}
 # entries. 128 holds the full-registry working set of 8 corpora.
 _MEMO: "OrderedDict[tuple, object]" = OrderedDict()
 _MEMO_CAP = 128
+_MEMO_LOCK = threading.Lock()
 
 
 def memo(spark: SparkSession, sf_dir: str, tables, name: str, build=None):
@@ -69,20 +74,25 @@ def memo(spark: SparkSession, sf_dir: str, tables, name: str, build=None):
     is dropped (a checkpoint's files then go with the session's
     cleanCheckpoints GC hook).
 
-    Single-threaded by contract: every caller (bench, sweep, check,
-    perfbench, Engine.run) builds and runs one key at a time, so there
-    is no lock."""
+    A lock guards the store but not ``build()``: register_views builds
+    the corpus scans on a thread pool. Two racing builds of one name
+    both run, and both callers get the value stored first. Every key
+    still runs one at a time (bench, sweep, check, perfbench,
+    Engine.run)."""
     fp = _corpus_fingerprint(sf_dir, tables) if tables else ""
     key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), fp, name)
-    hit = _MEMO.get(key)
-    if hit is not None:
-        _MEMO.move_to_end(key)
-        return hit
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+        if hit is not None:
+            _MEMO.move_to_end(key)
+            return hit
     if build is None:
         return None
     value = build()
-    if value is not None:
-        _MEMO[key] = value
+    if value is None:
+        return None
+    with _MEMO_LOCK:
+        value = _MEMO.setdefault(key, value)
         while len(_MEMO) > _MEMO_CAP:
             _MEMO.popitem(last=False)
     return value
@@ -99,17 +109,88 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     opt = _OPTIMIZED.get(sf_dir)
 
     def scan() -> DataFrame:
-        # scan plans are memoized: file listing + parquet footer/schema
-        # read cost ~100 ms of driver time per spark.read.parquet, and a
-        # multiway join builds six of them per query
+        # scan plans are memoized: a read runs no job (read_parquet), but
+        # file listing and relation resolution still cost driver time,
+        # and a multiway join builds six of them per query
         if opt is not None:
             # optimized copies were written by Spark itself: events.ts is
             # already a µs timestamp there — plain reads for every table
-            return spark.read.parquet(os.path.join(opt, f"{name}.parquet"))
+            return read_parquet(spark, os.path.join(opt, f"{name}.parquet"))
         path = os.path.join(sf_dir, f"{name}.parquet")
-        return _events(spark, path) if name == "events" else spark.read.parquet(path)
+        return _events(spark, path) if name == "events" else read_parquet(spark, path)
 
     return memo(spark, opt or sf_dir, (), name, scan)
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a directory entry of this name
+    (``HadoopFSUtils.shouldFilterOutPathName``): hidden ``.`` and ``_``
+    entries (``_SUCCESS``, checksums, ``_temporary``) are skipped unless
+    the name holds ``=``, which marks a partition directory."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def parquet_schema(spark: SparkSession, *paths: str) -> StructType:
+    """The schema Spark's parquet reader infers for ``paths``, read on
+    the driver from one file footer: no Spark job.
+
+    Inference with ``mergeSchema`` off reads the footer of the first data
+    file in path order and converts it with
+    ``ParquetFileFormat.readSchemaFromFooter`` and a
+    ``ParquetToSparkSchemaConverter`` built from the session conf; this
+    runs the same function on the same file, so the StructType is the
+    same. Inference launches a job for it, even for one file. Conf that
+    shapes the schema (``spark.sql.legacy.parquet.nanosAsLong``) is read
+    when the converter is built, so set it before the call.
+
+    Preconditions, the ones inference with ``mergeSchema=false`` makes
+    too: the files under ``paths`` share one schema, and Spark or the
+    corpus generator wrote them (no ``_metadata`` summary files, which
+    inference would prefer). Paths are local files or directories of
+    files. A directory that holds a subdirectory (a ``key=value``
+    partitioned layout) raises ValueError: such a layout needs the
+    reader's partition discovery, and a schema from one leaf file would
+    drop the partition columns."""
+    files = []
+    for path in paths:
+        if os.path.isfile(path):
+            files.append(path)
+            continue
+        for entry in os.scandir(path):  # FileNotFoundError when missing
+            if not _listed(entry.name):
+                continue
+            if entry.is_dir():
+                raise ValueError(
+                    f"parquet_schema: {path!r} holds the directory {entry.name!r}; "
+                    "a partitioned layout needs the reader's partition discovery"
+                )
+            files.append(entry.path)
+    if not files:
+        raise FileNotFoundError(f"parquet_schema: no data files under {paths!r}")
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    state = spark._jsparkSession.sessionState()
+    first = jvm.org.apache.hadoop.fs.Path(min(files))
+    footer = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, state.newHadoopConf()),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first, footer),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema from
+    :func:`parquet_schema`, so the read resolves without a job. Same
+    preconditions: one schema across the files, a flat layout."""
+    return spark.read.schema(parquet_schema(spark, *paths)).parquet(*paths)
 
 
 def _events(spark: SparkSession, path: str) -> DataFrame:
@@ -127,13 +208,11 @@ def _events(spark: SparkSession, path: str) -> DataFrame:
       matches DuckDB's naive TIMESTAMP semantics for every downstream
       date/interval function.
 
-    Conf + probe happen per read (cheap footer-only job) so the query
-    functions also work on a driver-provided vanilla session."""
-    import pyspark.sql.functions as F
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    return _normalize_ts(df)
+    Each call sets the conf before the footer schema is converted and
+    runs no job, so the query functions also work on a driver-provided
+    vanilla session."""
+    spark.conf.set(_NANOS_CONF, "true")
+    return _normalize_ts(read_parquet(spark, path))
 
 
 def _exact_partition_tokens(spark: SparkSession, n: int) -> list[int]:
@@ -244,9 +323,20 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view (for spark.sql entry)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+    """Register every corpus table as a temp view (for spark.sql entry).
+
+    Resolving a scan runs no job: it is a footer read, a file listing
+    and analysis on the driver, mostly class loading and interpreted
+    code in a fresh JVM. So the tables resolve on a thread pool as wide
+    as the session's cores; its threads take the caller's local
+    properties (job group), as a job run from them would need."""
+    sc = spark.sparkContext
+    props = sc._jsc.sc().getLocalProperties().clone()
+    with ThreadPoolExecutor(
+        min(len(TABLES), sc.defaultParallelism),
+        initializer=lambda: sc._jsc.sc().setLocalProperties(props),
+    ) as pool:
+        list(pool.map(lambda name: table(spark, sf_dir, name).createOrReplaceTempView(name), TABLES))
 
 
 def optimize_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -354,7 +444,7 @@ def optimize_layout(spark: SparkSession, sf_dir: str) -> str:
         # clustered customer file (order-preserving rewrite), so it is
         # restaged with every layout.
         (
-            spark.read.parquet(os.path.join(out, "customer.parquet"))
+            read_parquet(spark, os.path.join(out, "customer.parquet"))
             .select(*_SLIM_COLS)
             .write.mode("overwrite")
             .option("parquet.block.size", 16 * 1024 * 1024)
@@ -381,9 +471,8 @@ def slim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out:
         p = os.path.join(out, "customer_slim.parquet")
         if os.path.exists(p):
-            # memoized like every table scan: the uncached read costs a
-            # footer/schema-inference driver job on every query build
-            return memo(spark, out, (), "customer_slim", lambda: spark.read.parquet(p))
+            # memoized like every table scan (see table())
+            return memo(spark, out, (), "customer_slim", lambda: read_parquet(spark, p))
     return table(spark, sf_dir, "customer").select(*_SLIM_COLS)
 
 
@@ -538,7 +627,7 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
     catalog, which Catalyst's cost-based optimizer uses for join
     reordering and build-side choice once ``spark.sql.cbo.*`` is on.
 
-    Plain ``spark.read.parquet`` DataFrames (the hot path here) carry only
+    Plain parquet-read DataFrames (the hot path here) carry only
     file-size stats, so this is the catalog-table route a long-lived
     deployment would take: tables live in a per-SF database, data stays in
     place (external/unmanaged), and at 100 TB the ANALYZE scan itself is
@@ -616,13 +705,12 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _has_row_stats(spark: SparkSession, full: str) -> bool:
-    # metadata-only: DESCRIBE output is a handful of rows; the count()
-    # keeps even catalog introspection off the driver-collect path
-    return (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {full}")
-        .filter("col_name = 'Statistics' AND data_type LIKE '%rows%'")
-        .count()
-        > 0
+    # DESCRIBE is a command: it runs when spark.sql() returns and its
+    # handful of rows are local, so collecting them runs no job (a
+    # filter + count over them ran two under AQE)
+    return any(
+        r.col_name == "Statistics" and "rows" in (r.data_type or "")
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {full}").collect()
     )
 
 

@@ -269,6 +269,11 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
     return (
         b.appName(app_name)
         .master(f"local[{cpus}]")
+        # The worker daemon starts as `python -m pyspark.daemon`, which puts
+        # the working directory first on sys.path, ahead of PYTHONPATH: run
+        # from another checkout, workers would import ITS kwery_spark.
+        # PYTHONSAFEPATH (Python 3.11+) keeps the working directory off.
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         # AQE: runtime re-planning — coalesces shuffle partitions, converts
         # sort-merge to broadcast when runtime stats allow, splits skewed
         # partitions. Essential at 100 TB, harmless locally.

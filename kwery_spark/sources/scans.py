@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from kwery_spark.catalog import _SCRATCH, _corpus_fingerprint, round6, table
+from kwery_spark.catalog import _SCRATCH, _corpus_fingerprint, read_parquet, round6, table
 from kwery_spark.registry import register
 
 # Local scratch for sink round-trips; at cluster scale this would be an
@@ -269,7 +269,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @register(
@@ -390,7 +390,7 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(compacted)
     )
     return (
-        spark.read.parquet(compacted)
+        read_parquet(spark, compacted)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1030,7 +1030,7 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _stage_once(stage_dir, _corpus_fingerprint(sf_dir, ("events",)), write)
     return (
-        spark.read.parquet(data_dir)
+        read_parquet(spark, data_dir)
         .filter(F.col("user_id").isin(11, 4242))
         .groupBy("event_type")
         .agg(

@@ -34,7 +34,9 @@ race means someone else committed N:
   ConcurrentAppendException path).
 
 **Audit**: every commit re-reads its staged files and records their row
-count. Given ``expected_rows`` (the writer's independently computed
+count. The re-read takes its schema from a footer on the driver
+(``catalog.read_parquet``), so the count is its one job; every snapshot
+read and change-feed read resolves the same way, with no job. Given ``expected_rows`` (the writer's independently computed
 expectation), a mismatch removes the staged directory and raises
 ``AuditError`` before any version is claimed, so a lost or duplicated
 write never becomes visible.
@@ -63,7 +65,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from kwery_spark.catalog import table
+from kwery_spark.catalog import read_parquet, table
 from kwery_spark.registry import register
 from kwery_spark.sources.scans import pid_dir
 
@@ -177,7 +179,7 @@ class TxnLogTable:
         dirs = self.live_dirs(version)
         if not dirs:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
-        return spark.read.parquet(*[os.path.join(self.root, d) for d in dirs])
+        return read_parquet(spark, *[os.path.join(self.root, d) for d in dirs])
 
     def changes(self, spark: SparkSession, key: str) -> DataFrame:
         """Row-level change feed of every commit, in the shape of Delta's
@@ -206,8 +208,8 @@ class TxnLogTable:
         for v in range(latest + 1):
             entry = self.entry(v)
             if entry["operation"] == "append":
-                part = spark.read.parquet(
-                    *[os.path.join(self.root, d) for d in entry["add"]]
+                part = read_parquet(
+                    spark, *[os.path.join(self.root, d) for d in entry["add"]]
                 ).withColumn("_change_type", F.lit("insert"))
             else:
                 part = self._replace_changes(spark, v, key)
@@ -292,7 +294,7 @@ class TxnLogTable:
         rel = os.path.join("data", txn)
         path = os.path.join(self.root, rel)
         df.write.mode("errorifexists").parquet(path)  # immutable commit dir
-        rows = spark.read.parquet(path).count()  # audit re-read (see module doc)
+        rows = read_parquet(spark, path).count()  # audit re-read (see module doc)
         if expected_rows is not None and rows != expected_rows:
             shutil.rmtree(path, ignore_errors=True)
             raise AuditError(f"staged {rows} rows, expected {expected_rows}")

@@ -19,7 +19,13 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from kwery_spark.catalog import _SCRATCH, _corpus_fingerprint, _normalize_ts
+from kwery_spark.catalog import (
+    _SCRATCH,
+    _corpus_fingerprint,
+    _normalize_ts,
+    parquet_schema,
+    read_parquet,
+)
 from kwery_spark.registry import register
 
 SCRATCH = os.path.join(_SCRATCH, "streaming")
@@ -55,9 +61,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.symlink(src, link)
         except FileExistsError:
             pass  # concurrent session staged the same fingerprint
-    # footer-only batch read: the stream source requires an explicit
-    # schema, and this one is always the file's truth
-    raw_schema = spark.read.parquet(src).schema
+    # the stream source requires an explicit schema: the file's own
+    # footer, read on the driver (no job)
+    raw_schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(raw_schema).format("parquet").load(stage)
     return _normalize_ts(stream)
 
@@ -327,7 +333,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination(120)
     shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         # replay-dedupe: a re-run batch appends identical partials; keep
         # exactly one row per (batch_id, event_type)
         .groupBy("batch_id", "event_type")

@@ -13,7 +13,11 @@ import ab
 def test_two_arms_in_fresh_jvms_hash_equal(tmp_path, sf_dir):
     # cwd outside the checkout: the tool finds its package from __file__,
     # and the Python workers of mm_decode_features' mapInPandas find it
-    # through the session's PYTHONPATH
+    # through the session's PYTHONPATH. A decoy package in the cwd stands
+    # for another checkout; the workers must not import it.
+    decoy = tmp_path / "kwery_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text('raise ImportError("decoy package imported from the cwd")\n')
     proc = subprocess.run(
         [sys.executable, ab.__file__, "--sf", sf_dir,
          "--keys", "q1_pricing_summary,mm_decode_features", "--reps", "1",

@@ -1,7 +1,7 @@
 """Invariants of the session memo (kwery_spark/catalog.py ``memo``): a hit
 returns exactly what a cold build returns, the key carries the corpus
-directory and file fingerprints, negative probes are never stored, and
-the LRU cap holds."""
+directory and file fingerprints, negative probes are never stored, the
+LRU cap holds, and racing builds share one stored value."""
 
 from __future__ import annotations
 
@@ -136,3 +136,17 @@ def test_memo_cap_holds(spark, cold_memo):
     catalog.memo(spark, SF001, (), "fake_new", object)
     assert catalog.memo(spark, SF001, (), "fake_5") is oldest
     assert catalog.memo(spark, SF001, (), "fake_6") is None
+
+
+def test_racing_builds_share_the_first_stored_value(spark, cold_memo):
+    """Builds run outside the store's lock, so two callers of one name
+    may both build; both get the value stored first. A build that stores
+    the same name while it runs stands in for the other caller."""
+    first = object()
+
+    def build():
+        catalog.memo(spark, SF001, (), "raced", lambda: first)
+        return object()
+
+    assert catalog.memo(spark, SF001, (), "raced", build) is first
+    assert catalog.memo(spark, SF001, (), "raced") is first
