@@ -143,13 +143,7 @@ def _measure_spark(
             if i > 0:
                 times.append(dt)
         results[key] = round(min(times), 4)
-    for key in TPCH_TRIO:
-        fn = queries.get(key)
-        if fn is None or key not in results:
-            continue
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).toPandas()
-        results[key] = round(min(results[key], time.perf_counter() - t0), 4)
+    _rerun_trio_spark(spark, queries, sf_dir, results)
     return results
 
 
@@ -172,7 +166,8 @@ def _duckdb_load(con, sf_dir: str, prep_tables: bool) -> None:
 
 def _rerun_trio_spark(spark, queries, sf_dir: str, results: dict[str, float]) -> None:
     """One extra timed repetition of each TPC-H trio key, min-merged into
-    ``results`` (load-gated, see LOAD_RERUN_THRESHOLD)."""
+    ``results``: at the end of every pass, and once more when load-gated
+    (see LOAD_RERUN_THRESHOLD)."""
     for key in TPCH_TRIO:
         fn = queries.get(key)
         if fn is None or key not in results:
@@ -195,6 +190,13 @@ def _rerun_trio_duckdb(
 
     con = duckdb.connect()
     _duckdb_load(con, sf_dir, prep_tables)
+    _trio_duckdb(con, oracles, results)
+    con.close()
+
+
+def _trio_duckdb(con, oracles: dict[str, str], results: dict[str, float]) -> None:
+    """One extra timed repetition of each TPC-H trio oracle on an open,
+    loaded connection, min-merged into ``results``."""
     for key in TPCH_TRIO:
         sql = oracles.get(key)
         if sql is None or key not in results:
@@ -202,7 +204,6 @@ def _rerun_trio_duckdb(
         t0 = time.perf_counter()
         con.execute(sql).fetchall()
         results[key] = round(min(results[key], time.perf_counter() - t0), 4)
-    con.close()
 
 
 def _measure_duckdb(
@@ -251,13 +252,7 @@ def _measure_duckdb(
         results[key] = round(min(times), 4)
     # symmetric extra trio repetition (see TPCH_TRIO): more min-samples
     # for Spark only would bias the ratio, so the baseline gets the same
-    for key in TPCH_TRIO:
-        sql = oracles.get(key)
-        if sql is None or key not in results:
-            continue
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        results[key] = round(min(results[key], time.perf_counter() - t0), 4)
+    _trio_duckdb(con, oracles, results)
     con.close()
     return results
 

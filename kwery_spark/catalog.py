@@ -502,36 +502,63 @@ def _corpus_fingerprint(sf_dir: str, tables=TABLES) -> str:
     return hashlib.md5(repr(stats).encode()).hexdigest()[:10]
 
 
-def scan_splits(sf_dir: str, name: str) -> int:
+def _parquet_files(path: str) -> list[str]:
+    """The data files of a parquet table: ``path`` itself, or every
+    ``.parquet`` file under a dataset directory, walked RECURSIVELY (a
+    partitioned write nests files under key=value/ subdirectories) and
+    skipping ``_``/``.`` metadata entries. Callers turn footers into
+    plan-time literals, so a silently short listing would change plans:
+    a directory with no data file raises ValueError, and a missing file
+    raises when its footer is opened."""
+    if not os.path.isdir(path):
+        return [path]
+    files = [
+        os.path.join(root, e)
+        for root, _dirs, names in os.walk(path)
+        for e in sorted(names)
+        if e.endswith(".parquet") and not e.startswith(("_", "."))
+    ]
+    if not files:
+        raise ValueError(
+            f"no .parquet data files under {path!r} — "
+            "layout drift would silently change plan-time literals"
+        )
+    return files
+
+
+def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     """How many input splits a parquet scan of ``name`` will yield —
     derived from FILE FOOTERS (row-group count), not by instantiating an
     RDD lineage (``df.rdd.getNumPartitions()`` is a plan-build-time side
-    effect in an otherwise lazy registry — VERDICT r3 "what's wrong" #2).
-    Parquet can't split inside a row group, so the row-group total IS the
-    scan's max parallelism. Metadata-only: reads footers, runs no job;
-    at cluster scale this number comes from catalog stats instead.
-    Respects this process's optimized-layout redirection, since that is
-    what the scan will actually read."""
-    import pyarrow.parquet as _pq
+    effect in an otherwise lazy registry). Parquet can't split inside a
+    row group, so the row-group total IS the scan's max parallelism.
+    Metadata-only: reads footers on the driver, runs no job, once per
+    session and layout; at cluster scale this number comes from catalog
+    stats instead. Respects this process's optimized-layout redirection,
+    since that is what the scan will actually read.
 
-    base = _OPTIMIZED.get(sf_dir, sf_dir)
-    path = os.path.join(base, f"{name}.parquet")
-    files = (
-        [
-            os.path.join(path, e)
-            for e in os.listdir(path)
-            if e.endswith(".parquet") and not e.startswith("_")
-        ]
-        if os.path.isdir(path)
-        else [path]
-    )
-    n = 0
-    for f in files:
-        try:
-            n += _pq.ParquetFile(f).metadata.num_row_groups
-        except Exception:
-            n += 1  # unreadable footer: count the file as one split
-    return max(1, n)
+    The footers are read with Spark's own reader (as in parquet_schema):
+    the optimized layout stores events.props as VARIANT, a logical type
+    pyarrow cannot open. An unreadable footer raises: the count is a
+    plan-time literal."""
+    path = os.path.join(_OPTIMIZED.get(sf_dir, sf_dir), f"{name}.parquet")
+
+    def build() -> int:
+        jvm = spark._jvm
+        conf = spark._jsc.hadoopConfiguration()
+        no_filter = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+        n = 0
+        for f in _parquet_files(path):
+            file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+            footer = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+                file, no_filter
+            )
+            n += footer.getBlocks().size()
+        return max(1, n)
+
+    return memo(spark, sf_dir, (name,), f"scan_splits {path}", build)
 
 
 def parquet_rows(sf_dir: str, name: str) -> int:
@@ -540,32 +567,11 @@ def parquet_rows(sf_dir: str, name: str) -> int:
     (build_bucketed's bucket count, the nation memo): operators use it
     to derive bounded scale knobs (broadcast gates, grid cell widths)
     that a cluster deployment would read from catalog stats instead.
-    Layout-invariant, so it reads the raw sf_dir files directly.
-
-    r14 hardening (ADVICE r13): operators call this at PLAN time and
-    its value becomes a plan literal (kNN grid width, broadcast gates),
-    so a silently-undercounted layout variant would change plans and
-    break oracle parity on the derived literal. Dataset directories are
-    walked RECURSIVELY (a partitioned write nests files under
-    key=value/ subdirectories), and zero matching data files is a loud
-    ValueError, never a zero count."""
+    Layout-invariant, so it reads the raw sf_dir files directly; the
+    listing is _parquet_files'."""
     import pyarrow.parquet as _pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, e)
-            for root, _dirs, names in os.walk(path)
-            for e in sorted(names)
-            if e.endswith(".parquet") and not e.startswith(("_", "."))
-        ]
-        if not files:
-            raise ValueError(
-                f"parquet_rows: no .parquet data files under {path!r} — "
-                "layout drift would silently change plan-time literals"
-            )
-    else:
-        files = [path]  # os.stat via ParquetFile raises on a missing file
+    files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
 
 

@@ -307,7 +307,7 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events").select("event_type", "props")
     target = max(8, spark.sparkContext.defaultParallelism // 2)
-    if scan_splits(sf_dir, "events") < target // 2:
+    if scan_splits(spark, sf_dir, "events") < target // 2:
         ev = ev.repartition(target)
     already_variant = dict(ev.dtypes).get("props") == "variant"
     src = "props" if already_variant else "parse_json(props)"

@@ -20,7 +20,7 @@ Scale notes (the whole point of these ops):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from kwery_spark.catalog import table
 from kwery_spark.registry import register
@@ -51,6 +51,192 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The near-duplicate pair pipeline shared by the pair keys below. Each key
+# contracts its rows to DISTINCT contents first (the content-cardinality
+# rule: the corpus upscale clones rows verbatim, so a pair search over raw
+# rows grows with the square of the clone factor), finds pairs between
+# contents, and then either expands them to member pairs (_fan_out,
+# _same_content_pairs) or reports them per band from multiplicities
+# (_band_report). ``keyed`` is the member map: one row per member with its
+# content key ``ckey``. Member ids named ``<stem>_id`` pair up as
+# ``<stem>_a`` / ``<stem>_b``.
+
+# Encodes a normalized (doc_a, doc_b) pair into one BIGINT so both engines
+# can take an exact lexicographic MIN over pairs: doc_a*2^32 + doc_b.
+# Safe while doc_id < 2^31 (sf100 has ~60M docs; 2^31 headroom is 35x).
+_PAIR_ENC = 4294967296
+
+
+def _pair_names(id_col: str) -> tuple[str, str]:
+    stem = id_col.removesuffix("_id")
+    return f"{stem}_a", f"{stem}_b"
+
+
+def _fan_out(content_pairs: DataFrame, keyed: DataFrame, id_col: str, measure: str) -> DataFrame:
+    """Member pairs of cross-content pairs: each (ckey_a, ckey_b, measure)
+    row expands to |A| x |B| member pairs at that measure, ids ordered
+    least/greatest. Linear in the output."""
+    a, b = _pair_names(id_col)
+    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col(id_col).alias("id_a"))
+    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col(id_col).alias("id_b"))
+    return (
+        content_pairs.join(ka, "ckey_a")
+        .join(kb, "ckey_b")
+        .select(
+            F.least("id_a", "id_b").alias(a),
+            F.greatest("id_a", "id_b").alias(b),
+            measure,
+        )
+    )
+
+
+def _same_content_pairs(members: DataFrame, id_col: str) -> DataFrame:
+    """Member pairs inside one content (x.ckey = y.ckey AND x.id < y.id)
+    of a (ckey, ``id_col``) frame, as (ckey, <stem>_a, <stem>_b). The
+    caller attaches the measure: a content's similarity to itself."""
+    a, b = _pair_names(id_col)
+    return (
+        members.alias("x")
+        .join(
+            members.alias("y"),
+            (F.col("x.ckey") == F.col("y.ckey"))
+            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+        )
+        .select(
+            F.col("x.ckey").alias("ckey"),
+            F.col(f"x.{id_col}").alias(a),
+            F.col(f"y.{id_col}").alias(b),
+        )
+    )
+
+
+def _band_report(keyed: DataFrame, cross_units: DataFrame, band: str, same_band: int) -> DataFrame:
+    """Bounded per-band report of a doc-pair set, computed from content
+    multiplicities without materializing a doc pair: per ``band`` value,
+    the EXACT doc-pair count, the number of content-level units behind
+    it, and the lexicographically smallest doc pair.
+
+    ``cross_units`` has one row per cross-content pair: (``band``, rep_a,
+    rep_b, cnt_a, cnt_b), reps being their contents' min doc_id. It
+    contributes cnt_a*cnt_b pairs with exemplar (least(rep), greatest(rep)),
+    which IS the unit's lexicographic min pair: the smaller rep is the
+    unit's global min doc and its smallest partner in the other content
+    is that content's rep. Each multi-member content of ``keyed``
+    (doc_id, ckey) contributes C(cnt,2) pairs at ``same_band`` with
+    exemplar (rep, second-smallest member), the latter from a SORTED
+    collect (determinism rule).
+
+    Exactness: counts are integer algebra and the exemplar MIN runs over
+    doc_a*2^32+doc_b encodings (exact BIGINTs, _PAIR_ENC)."""
+    enc = F.lit(_PAIR_ENC).cast("long")
+    cross = cross_units.select(
+        F.col(band),
+        (F.col("cnt_a") * F.col("cnt_b")).cast("long").alias("n_pairs"),
+        (F.least("rep_a", "rep_b") * enc + F.greatest("rep_a", "rep_b")).alias("ex"),
+    )
+    within = (
+        keyed.groupBy("ckey")
+        .agg(
+            F.min("doc_id").alias("rep"),
+            F.count(F.lit(1)).alias("cnt"),
+            # try_: singleton groups have no second member; they are
+            # filtered on cnt below, but the agg projection evaluates first
+            F.try_element_at(F.array_sort(F.collect_list("doc_id")), F.lit(2)).alias("d2"),
+        )
+        .filter(F.col("cnt") >= 2)
+        .select(
+            F.lit(same_band).cast("long").alias(band),
+            F.expr("CAST(cnt * (cnt - 1) DIV 2 AS BIGINT)").alias("n_pairs"),
+            (F.col("rep") * enc + F.col("d2")).alias("ex"),
+        )
+    )
+    return (
+        cross.unionByName(within)
+        .groupBy(band)
+        .agg(
+            F.sum("n_pairs").cast("long").alias("n_pairs"),
+            F.count(F.lit(1)).cast("long").alias("n_units"),
+            F.min("ex").alias("exmin"),
+        )
+        .select(
+            band,
+            "n_pairs",
+            "n_units",
+            F.shiftright("exmin", 32).cast("long").alias("ex_doc_a"),
+            F.col("exmin").bitwiseAND(F.lit(4294967295)).cast("long").alias("ex_doc_b"),
+        )
+        .coalesce(1)
+        .sortWithinPartitions(band)
+    )
+
+
+def _cosine_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
+    """Embedding pairs (vec_a, vec_b, cosine) with rounded cosine >= ``tau``
+    inside one ``label``, over distinct (label, vector) contents.
+
+    Unit vectors, so cosine = dot; floats widen to double BEFORE the
+    multiply so Spark and the oracle accumulate identically, and scores
+    round to 6dp. Rep pairs come from a triangle-salted label block
+    (S=8, similarity.triangle_salted_self_join), so a hot label's pair
+    space spreads over S(S+1)/2 tasks instead of one reducer. The dot of
+    any member pair equals the dot of the reps because the arrays are
+    identical, so the expansion keeps the exact oracle values; members of
+    one content pair at dot(v, v), computed rather than assumed 1.0 (the
+    float self-dot of a unit vector is ~1 ± ulp and the oracle computes
+    the same fold)."""
+    from kwery_spark.operators.similarity import _vecs, dot, triangle_salted_self_join
+
+    keyed = _vecs(spark, sf_dir).withColumn(
+        "ckey", F.md5(F.to_json(F.struct("label", "v")))
+    )
+    groups = keyed.groupBy("label", "ckey").agg(
+        F.min("vec_id").alias("rep"), F.count(F.lit(1)).alias("cnt")
+    )
+    reps = groups.join(
+        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
+    ).select("label", "ckey", "rep", "v")
+    rep_pairs = (
+        triangle_salted_self_join(reps, "label", "rep", S=8)
+        .select(
+            F.col("a.ckey").alias("ckey_a"),
+            F.col("b.ckey").alias("ckey_b"),
+            F.round(dot("a.v", "b.v"), 6).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= tau)
+    )
+    self_cos = groups.filter(F.col("cnt") >= 2).join(
+        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
+    ).select(F.col("ckey").alias("sckey"), F.round(dot("v", "v"), 6).alias("cosine"))
+    within = (
+        _same_content_pairs(keyed.select("ckey", "vec_id"), "vec_id")
+        .join(self_cos, F.col("ckey") == F.col("sckey"))
+        .select("vec_a", "vec_b", "cosine")
+        .filter(F.col("cosine") >= tau)
+    )
+    return _fan_out(rep_pairs, keyed, "vec_id", "cosine").unionByName(within)
+
+
+def _minhash(tokens: str, k: int) -> Column:
+    """k seeded MinHash values of the array<string> column ``tokens``:
+    entry i is the min over the set of xxhash64(i, token). Evaluate it on
+    a STORED set column behind a barrier, so it runs once per row."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)),
+        lambda i: F.array_min(F.transform(F.col(tokens), lambda t: F.xxhash64(i, t))),
+    )
+
+
+def _bands(mh: str, n_bands: int, rows: int) -> Column:
+    """One (band_id, band_hash) row per band of the MinHash column ``mh``:
+    band j is xxhash64 of rows [rows*j+1 .. rows*j+rows]."""
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_bands - 1)),
+            lambda j: F.xxhash64(F.slice(mh, j * rows + 1, rows)),
+        )
+    ).alias("band_id", "band_hash")
+
+
 _JACCARD_ORACLE = """
     WITH toks AS (
         SELECT doc_id, list_distinct(str_split(text, ' ')) AS t
@@ -66,23 +252,20 @@ _JACCARD_ORACLE = """
 
 
 def _near_dup_content_graph(spark: SparkSession, sf_dir: str):
-    """Shared content-level near-dup machinery: documents grouped by
-    identical token set (ckey, rep = min doc_id, cnt), and the verified
-    rep-level Jaccard>=0.9 pair graph from 256-hash MinHash LSH (32
-    bands x 8 rows). Both dedup_minhash (pair expansion) and
-    dedup_clusters (connected components) consume this; the LSH pair
-    space is bounded by DISTINCT contents, never raw row count.
-    Returns (keyed, groups, rep_pairs)."""
+    """Content-level near-dup graph: documents grouped by identical token
+    set (ckey, rep = min doc_id, cnt), and the verified rep-level
+    Jaccard>=0.9 pair graph from 256-hash MinHash LSH (32 bands x 8
+    rows). dedup_minhash, _minhash_doc_pairs and dedup_clusters consume
+    it; the LSH pair space is bounded by DISTINCT contents, never raw row
+    count. Returns (keyed, groups, rep_pairs)."""
     raw = table(spark, sf_dir, "documents").select(
-
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
-    # eager checkpoints instead of the r5 repartition exchange barrier:
-    # ReuseExchange only dedupes plan-identical subtrees, and keyed/reps
-    # feed NON-identical aliases (groups, the rep-toks join, ka/kb/kc,
-    # both exact-verify sides) which each re-ran the scan+md5/token work
-    # (the r8 containment finding, 127 -> 13 s there; minhash sweep
-    # 108 -> see BASELINE.md)
+    # eager checkpoints, not an exchange barrier: ReuseExchange only
+    # dedupes plan-identical subtrees, and keyed/reps feed NON-identical
+    # aliases (groups, the rep-toks join, both expansion legs, both
+    # exact-verify sides), each of which would re-run the scan and the
+    # md5/token work
     keyed = raw.select(
         "doc_id",
         "toks",
@@ -94,25 +277,10 @@ def _near_dup_content_graph(spark: SparkSession, sf_dir: str):
     reps = groups.join(
         keyed.select(F.col("doc_id").alias("rep"), "toks"), "rep"
     ).select("rep", "ckey", "cnt", "toks").localCheckpoint(eager=True)
-    # 256 min-hashes per representative: min over tokens of xxhash64(seed, tok),
-    # computed from the STORED toks column (single evaluation per content)
-    minhashes = F.transform(
-        F.sequence(F.lit(0), F.lit(255)),
-        lambda i: F.array_min(F.transform(F.col("toks"), lambda t: F.xxhash64(i, t))),
-    )
-    hashed = reps.select("rep", "toks", minhashes.alias("mh")).localCheckpoint(
+    hashed = reps.select("rep", "toks", _minhash("toks", 256).alias("mh")).localCheckpoint(
         eager=True
     )
-    # band j = rows [8j+1 .. 8j+8]; one row per (rep, band)
-    bands = hashed.select(
-        "rep",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(31)),
-                lambda j: F.xxhash64(F.slice("mh", j * 8 + 1, 8)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = hashed.select("rep", _bands("mh", 32, 8))
     cand = (
         bands.alias("a")
         .join(
@@ -138,58 +306,26 @@ def _near_dup_content_graph(spark: SparkSession, sf_dir: str):
 
 
 def _minhash_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full doc-level near-dup pair expansion (Jaccard >= 0.9) from the
-    shared content-level MinHash-LSH graph: cross-content pairs fan out
-    |A|x|B| at their verified jaccard, same-content groups emit their
-    C(k,2) internal pairs at jaccard 1.0. Linear in the true pair
-    output — which is exactly why it is no longer the REGISTERED
-    contract (see dedup_minhash below): under clone-heavy corpora the
-    true pair count itself grows quadratically in clone multiplicity
-    (485 s at sf30, r10 sweep — all of it output materialization).
-    Tests still consume this expansion to cross-check the summary."""
+    """Full doc-level near-dup pair expansion (Jaccard >= 0.9) of the
+    content-level MinHash-LSH graph: cross-content pairs fan out |A|x|B|
+    at their verified jaccard, same-content groups emit their C(k,2)
+    internal pairs at jaccard 1.0. Linear in the true pair output, which
+    under clone-heavy corpora itself grows quadratically in clone
+    multiplicity, so the registered key is the bounded report
+    (dedup_minhash). Tests consume this expansion to cross-check it."""
     keyed, groups, rep_pairs = _near_dup_content_graph(spark, sf_dir)
-    # expansion: cross-content pairs fan out over both member sets
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("doc_id").alias("da"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("doc_id").alias("db"))
     rep2key = groups.select("rep", "ckey")
-    cross = (
-        rep_pairs.join(
-            rep2key.select(F.col("rep").alias("rep_a"), F.col("ckey").alias("ckey_a")),
-            "rep_a",
-        )
-        .join(
-            rep2key.select(F.col("rep").alias("rep_b"), F.col("ckey").alias("ckey_b")),
-            "rep_b",
-        )
-        .join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
+    content_pairs = rep_pairs.join(
+        rep2key.select(F.col("rep").alias("rep_a"), F.col("ckey").alias("ckey_a")),
+        "rep_a",
+    ).join(
+        rep2key.select(F.col("rep").alias("rep_b"), F.col("ckey").alias("ckey_b")),
+        "rep_b",
     )
-    kc = keyed.select("ckey", "doc_id")
-    within = (
-        kc.alias("x")
-        .join(
-            kc.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
+    within = _same_content_pairs(keyed.select("ckey", "doc_id"), "doc_id").select(
+        "doc_a", "doc_b", F.lit(1.0).alias("jaccard")
     )
-    return cross.unionByName(within)
-
-
-# Encodes a normalized (doc_a, doc_b) pair into one BIGINT so both engines
-# can take an exact lexicographic MIN over pairs: doc_a*2^32 + doc_b.
-# Safe while doc_id < 2^31 (sf100 has ~60M docs; 2^31 headroom is 35x).
-_PAIR_ENC = 4294967296
+    return _fan_out(content_pairs, keyed, "doc_id", "jaccard").unionByName(within)
 
 
 @register(
@@ -235,85 +371,34 @@ _PAIR_ENC = 4294967296
     """,
 )
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup REPORT (Jaccard >= 0.9) over the shared
-    content-level graph (_near_dup_content_graph — design, parameters
-    and the r5 scale history documented there): per jaccard millibands
+    """MinHash-LSH near-dup REPORT (Jaccard >= 0.9) over the content-level
+    graph (_near_dup_content_graph): per jaccard milliband
     (floor(j*1000)), the EXACT expanded doc-pair count, the number of
     content-level units behind it, and the lexicographically smallest
     exemplar pair.
 
-    r11 contract (VERDICT r10 item 3): the registered output is this
-    bounded summary, not the materialized pair list. The pair list is
-    linear in the true output, but under clone-heavy corpora the true
-    output itself grows quadratically in clone multiplicity — the r10
-    sf30 sweep measured 485 s, ALL of it pair materialization. At
-    100 TB nobody ships the pair list; the linear deliverable is the
-    cluster membership (dedup_clusters) and this report is the audit
-    artifact. Counts are computed ANALYTICALLY from multiplicities —
-    cross pairs contribute cnt_a*cnt_b at the rep jaccard, same-content
-    groups C(cnt,2) at jaccard 1.0 (cross units can never land in band
-    1000: jaccard=1 iff equal token sets iff same content key) — so no
-    doc-level pair is ever materialized and the plan is bounded by
-    DISTINCT content cardinality. The full expansion survives as
-    _minhash_doc_pairs for tests and downstream consumers that want it.
+    The registered output is this bounded summary, not the materialized
+    pair list: under clone-heavy corpora the true pair count grows
+    quadratically in clone multiplicity, so the pair list is all output
+    materialization. The linear deliverable is the cluster membership
+    (dedup_clusters) and this report is the audit artifact. _band_report
+    computes the counts from multiplicities, so the plan is bounded by
+    DISTINCT content cardinality; the full expansion is
+    _minhash_doc_pairs. Same-content groups land in band 1000, and cross
+    units never do: jaccard=1 iff equal token sets iff same content key.
 
-    Exactness: counts are integer algebra; jband floors a double product
-    of an identically-computed ratio of ints (bit-identical across
-    engines); the exemplar MIN runs over doc_a*2^32+doc_b encodings
-    (exact BIGINTs, see _PAIR_ENC)."""
+    Exactness: jband floors a double product of an identically-computed
+    ratio of ints (bit-identical across engines); counts and exemplars
+    are exact integers (_band_report)."""
     keyed, groups, rep_pairs = _near_dup_content_graph(spark, sf_dir)
-    enc = F.lit(_PAIR_ENC).cast("long")
     ga = groups.select(F.col("rep").alias("rep_a"), F.col("cnt").alias("cnt_a"))
     gb = groups.select(F.col("rep").alias("rep_b"), F.col("cnt").alias("cnt_b"))
     cross_units = (
         rep_pairs.join(ga, "rep_a")
         .join(gb, "rep_b")
-        .select(
-            F.floor(F.col("jaccard") * 1000).cast("long").alias("jband"),
-            (F.col("cnt_a") * F.col("cnt_b")).cast("long").alias("n_pairs"),
-            (
-                F.least("rep_a", "rep_b") * enc + F.greatest("rep_a", "rep_b")
-            ).alias("ex"),
-        )
+        .withColumn("jband", F.floor(F.col("jaccard") * 1000).cast("long"))
     )
-    # within-group exemplar = (rep, second-smallest member); rep is the
-    # group min by construction, d2 from a SORTED collect (determinism
-    # rule). Groups re-aggregated from the checkpointed keyed frame —
-    # the d2 column is only needed here, not by the shared graph.
-    within_units = (
-        keyed.groupBy("ckey")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.count(F.lit(1)).alias("cnt"),
-            # try_: singleton groups have no second member; they are
-            # filtered on cnt below, but the agg projection evaluates first
-            F.try_element_at(F.array_sort(F.collect_list("doc_id")), F.lit(2)).alias("d2"),
-        )
-        .filter(F.col("cnt") >= 2)
-        .select(
-            F.lit(1000).cast("long").alias("jband"),
-            F.expr("CAST(cnt * (cnt - 1) DIV 2 AS BIGINT)").alias("n_pairs"),
-            (F.col("rep") * enc + F.col("d2")).alias("ex"),
-        )
-    )
-    return (
-        cross_units.unionByName(within_units)
-        .groupBy("jband")
-        .agg(
-            F.sum("n_pairs").cast("long").alias("n_pairs"),
-            F.count(F.lit(1)).cast("long").alias("n_units"),
-            F.min("ex").alias("exmin"),
-        )
-        .select(
-            "jband",
-            "n_pairs",
-            "n_units",
-            F.shiftright("exmin", 32).cast("long").alias("ex_doc_a"),
-            F.col("exmin").bitwiseAND(F.lit(4294967295)).cast("long").alias("ex_doc_b"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("jband")
-    )
+    return _band_report(keyed, cross_units, "jband", 1000)
 
 
 def _simhash_content_graph(spark: SparkSession, sf_dir: str):
@@ -321,8 +406,8 @@ def _simhash_content_graph(spark: SparkSession, sf_dir: str):
     checkpointed), and rep_pairs — bucket-blocked content-representative
     pairs at Hamming <= 8 carrying (rep_a, rep_b, ckey_a, ckey_b,
     cnt_a, cnt_b, hamming). Design notes live on dedup_simhash below;
-    split out in r11 so the registered summary and the full expansion
-    (_simhash_doc_pairs) consume one build."""
+    the registered summary and the full expansion (_simhash_doc_pairs)
+    consume this one build."""
     raw = table(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
@@ -403,38 +488,15 @@ def _simhash_content_graph(spark: SparkSession, sf_dir: str):
 def _simhash_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full doc-level SimHash pair expansion (Hamming <= 8): cross-content
     pairs fan out |A|x|B| at the rep Hamming distance, same-content
-    members at Hamming 0. Linear in the true pair output — which under
-    clone-heavy corpora is itself clone-quadratic (14.9e9 rows / 206 s
-    at sf30, r11 sweep — all output materialization), so since r11 it is
-    no longer the REGISTERED contract (see dedup_simhash). Tests still
-    consume this expansion to cross-check the summary."""
+    members pair at Hamming 0. Linear in the true pair output, which
+    under clone-heavy corpora is itself clone-quadratic, so the
+    registered key is the bounded report (dedup_simhash). Tests consume
+    this expansion to cross-check it."""
     keyed, rep_pairs = _simhash_content_graph(spark, sf_dir)
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("doc_id").alias("da"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "hamming",
-        )
+    within = _same_content_pairs(keyed.select("ckey", "doc_id"), "doc_id").select(
+        "doc_a", "doc_b", F.lit(0).cast("long").alias("hamming")
     )
-    kc = keyed.select("ckey", "doc_id")
-    within = (
-        kc.alias("x")
-        .join(
-            kc.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(0).cast("long").alias("hamming"),
-        )
-    )
-    return cross.unionByName(within)
+    return _fan_out(rep_pairs, keyed, "doc_id", "hamming").unionByName(within)
 
 
 @register(
@@ -488,109 +550,39 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of content-level units behind it, and the lexicographically
     smallest exemplar pair.
 
-    r11 contract (same reformulation as dedup_minhash, VERDICT r10
-    item 3): the registered output is this bounded summary, not the
-    materialized pair list. The expansion is linear in the true pair
-    output, but under clone-heavy corpora the true output itself grows
-    quadratically in clone multiplicity — the r11 sf30 sweep measured
-    14.9e9 output rows / 206 s, all of it pair materialization. At
-    100 TB the linear deliverable is cluster membership (dedup_clusters);
-    this report is the audit artifact. Counts are computed ANALYTICALLY
-    from multiplicities — cross units contribute cnt_a*cnt_b at the rep
-    Hamming distance, same-content groups C(cnt,2) at Hamming 0 (unlike
-    the Jaccard case, cross units CAN land in band 0: distinct token
-    sets may collide on all 60 signature bits — band 0 simply sums both
-    unit kinds, identically in the oracle) — so no doc-level pair is
-    ever materialized and the plan is bounded by DISTINCT content
-    cardinality. The full expansion survives as _simhash_doc_pairs for
-    tests and downstream consumers.
-
-    Exactness: counts are integer algebra; hamming is a bit_count of
-    identical integer signatures; the exemplar MIN runs over
-    doc_a*2^32+doc_b encodings (exact BIGINTs, _PAIR_ENC). The unit
-    exemplar (least(rep_a,rep_b), greatest(rep_a,rep_b)) IS the unit's
-    lexicographic min pair: reps are group minima, so the smaller rep is
-    the unit's global min doc and its smallest partner in the OTHER
-    group is that group's rep (within-group exemplar: (rep, d2) from a
-    sorted collect, the minhash pattern).
+    The registered output is this bounded summary, not the materialized
+    pair list, for the reason given on dedup_minhash; the full expansion
+    is _simhash_doc_pairs. _band_report computes the counts from
+    multiplicities. Unlike the Jaccard case, cross units CAN land in
+    band 0: distinct token sets may collide on all 60 signature bits, and
+    band 0 sums both unit kinds, identically in the oracle. hamming is a
+    bit_count of identical integer signatures, so it is exact.
 
     Pure expression pipeline (no UDF). The token hash is the md5 hex
     prefix (15 hex chars = 60 bits) parsed base-16 — an engine-portable
     choice (Spark conv() ≡ DuckDB hex cast), so the whole pipeline is
     value-checked against the oracle, unlike xxhash64 which only Spark
-    implements. tests/test_llm_ops.py additionally asserts high-Jaccard
+    implements. tests/test_dedup.py additionally asserts high-Jaccard
     pairs land at low Hamming distance.
 
     Scale: the signature depends only on the token SET, so it is
-    computed once per DISTINCT content (the same contraction
-    dedup_minhash uses — the r5 sweep showed the doc-level form's
-    prefix buckets inflating 10x under the upscale's content
-    duplication, timing out at sf1); the pair search blocks on the
-    top-16 signature bits (prefix bucketing) so the quadratic term
-    stays per-bucket, and doc pairs are expanded from content pairs
-    linearly in the true output (cross-content at the rep Hamming
-    distance, same-content members at Hamming 0).
-
-    r8 rewrite (sf10 sweep 367 s → see SCALESWEEP_r8): profiling showed
-    the cost was NOT the signature math but its RE-EVALUATION — the
-    bucket self-join inlined the whole signature pipeline into both
-    sides (rep_pairs.count() alone was 82 s at sf1 on 3,935 signature
-    rows), and keyed's md5-of-sorted-tokens was recomputed by all three
-    expansion legs. Both are now localCheckpoint(eager)'d — sig is one
-    row per DISTINCT content, keyed is (doc_id, ckey) — so the fold and
-    the content keys are computed exactly once and every downstream
-    join runs on materialized small tables (the ml_logistic_irls
-    pattern; final plan has NO parquet scan, locked in test_rewrites).
-    The fold itself is posexplode + 60 codegen'd conditional SUMs
-    (whole-stage codegen) instead of a nested interpreted HOF lambda —
-    measured bit-identical and ~2x faster; the groupBy(rep) reuses the
-    rep-join's partitioning, so the explode adds no exchange."""
+    computed once per DISTINCT content (the content-cardinality rule:
+    the doc-level form's prefix buckets inflate with the upscale's
+    content duplication); the pair search blocks on the top-16 signature
+    bits (prefix bucketing) so the quadratic term stays per-bucket.
+    The cost to avoid is the signature's RE-EVALUATION, not its math: the
+    bucket self-join would inline the whole signature pipeline into both
+    sides, and every expansion leg would recompute keyed's
+    md5-of-sorted-tokens. Both are localCheckpoint(eager)'d — sig is one
+    row per DISTINCT content, keyed is (doc_id, ckey) — so every
+    downstream join runs on materialized small tables (the final plan
+    has NO parquet scan, locked in test_rewrites). The fold is posexplode
+    + 60 codegen'd conditional SUMs (whole-stage codegen), bit-identical
+    to and about twice as fast as a nested interpreted HOF lambda; the
+    groupBy(rep) reuses the rep-join's partitioning, so the explode adds
+    no exchange."""
     keyed, rep_pairs = _simhash_content_graph(spark, sf_dir)
-    enc = F.lit(_PAIR_ENC).cast("long")
-    cross_units = rep_pairs.select(
-        F.col("hamming"),
-        (F.col("cnt_a") * F.col("cnt_b")).cast("long").alias("n_pairs"),
-        (
-            F.least("rep_a", "rep_b") * enc + F.greatest("rep_a", "rep_b")
-        ).alias("ex"),
-    )
-    # within-group exemplar = (rep, second-smallest member); d2 from a
-    # SORTED collect (determinism rule). Groups re-aggregated from the
-    # checkpointed keyed frame (the dedup_minhash pattern).
-    within_units = (
-        keyed.groupBy("ckey")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.try_element_at(
-                F.array_sort(F.collect_list("doc_id")), F.lit(2)
-            ).alias("d2"),
-        )
-        .filter(F.col("cnt") >= 2)
-        .select(
-            F.lit(0).cast("long").alias("hamming"),
-            F.expr("CAST(cnt * (cnt - 1) DIV 2 AS BIGINT)").alias("n_pairs"),
-            (F.col("rep") * enc + F.col("d2")).alias("ex"),
-        )
-    )
-    return (
-        cross_units.unionByName(within_units)
-        .groupBy("hamming")
-        .agg(
-            F.sum("n_pairs").cast("long").alias("n_pairs"),
-            F.count(F.lit(1)).cast("long").alias("n_units"),
-            F.min("ex").alias("exmin"),
-        )
-        .select(
-            "hamming",
-            "n_pairs",
-            "n_units",
-            F.shiftright("exmin", 32).cast("long").alias("ex_doc_a"),
-            F.col("exmin").bitwiseAND(F.lit(4294967295)).cast("long").alias("ex_doc_b"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("hamming")
-    )
+    return _band_report(keyed, rep_pairs, "hamming", 0)
 
 
 @register(
@@ -615,11 +607,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-bigram Jaccard near-dup (order-sensitive n-grams catch
     reorderings that token-set Jaccard misses), blocked by
-    (lang, minhash band) — NOT by lang alone, which r2 shipped and which
-    turns quadratic inside a hot lang ("en" is ~half of any real corpus).
+    (lang, minhash band) — NOT by lang alone, which turns quadratic
+    inside a hot lang ("en" is ~half of any real corpus).
 
-    Candidate generation reuses the dedup_minhash design over the bigram
-    set: 64 seeded xxhash64 min-hashes → 32 bands × 2 rows → equi-join on
+    Candidate generation is MinHash LSH over the bigram set: 64 seeded
+    xxhash64 min-hashes → 32 bands × 2 rows → equi-join on
     (lang, band_id, band_hash); candidates are then verified with EXACT
     bigram Jaccard, so the oracle stays the full within-lang exact pair
     set: P(miss | j ≥ 0.75) ≤ (1 − 0.75²)³² ≈ 3.3e-12 — the banding only
@@ -627,11 +619,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |bucket|², not |lang|²."""
     docs = table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
-    # bigrams via zip_with(head, tail) — the prior sequence+element_at
-    # HOF paid an O(n) array traversal per interpreted lambda call
-    # (text_ngrams r8 A/B: 28.7 s vs 2.6 s at sf1); zip_with of two
-    # slices walks both arrays once, and slice(toks, 2, n-1) of a
-    # 1-token doc is empty, preserving the no-bigram guard
+    # bigrams via zip_with(head, tail): one walk of both slices, where a
+    # sequence+element_at HOF pays an O(n) traversal per interpreted
+    # lambda call; slice(toks, 2, n-1) of a 1-token doc is empty,
+    # preserving the no-bigram guard
     grams = F.array_distinct(
         F.zip_with(
             F.slice(toks, 1, F.size(toks) - 1),
@@ -640,8 +631,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # contract identical (lang, text) contents first (content-cardinality
-    # rule, r5 sweep: the doc-level form timed out at sf10 where every
-    # content has 100 copies); grams/signatures/verification all run per
+    # rule); grams, signatures and verification all run per
     # representative and doc pairs expand linearly in the true output.
     keyed = docs.select(
         "doc_id", "lang", F.md5(F.concat_ws("\x1f", "lang", "text")).alias("ckey")
@@ -649,10 +639,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cgroups = keyed.groupBy("lang", "ckey").agg(
         F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("cnt")
     )
-    # eager checkpoint instead of the r5 repartition("rep") exchange
-    # barrier: ReuseExchange only dedupes plan-identical subtrees, and
-    # the verify-join aliases below are NOT plan-identical (the r8
-    # text_minhash_containment finding, 127 -> 13 s) — a checkpoint
+    # eager checkpoint, not a repartition("rep") exchange barrier:
+    # ReuseExchange only dedupes plan-identical subtrees, and the
+    # verify-join aliases below are NOT plan-identical — a checkpoint
     # materializes the gram build exactly once for every consumer
     g = (
         cgroups.join(
@@ -661,26 +650,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rep", "ckey", "lang", grams.alias("g"))
         .localCheckpoint(eager=True)
     )
-    # 64 min-hashes over the bigram set; band j = rows [2j+1, 2j+2].
-    # Computed from the STORED g column (single evaluation) and
-    # checkpointed — one 64-long signature row per distinct content.
-    minhashes = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.array_min(F.transform(F.col("g"), lambda t: F.xxhash64(i, t))),
-    )
-    hashed = g.select("rep", "lang", minhashes.alias("mh")).localCheckpoint(
+    # one 64-long signature row per distinct content, from the STORED g
+    hashed = g.select("rep", "lang", _minhash("g", 64).alias("mh")).localCheckpoint(
         eager=True
     )
-    bands = hashed.select(
-        "rep",
-        "lang",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(31)),
-                lambda j: F.xxhash64(F.slice("mh", j * 2 + 1, 2)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = hashed.select("rep", "lang", _bands("mh", 32, 2))
     cand = (
         bands.alias("a")
         .join(
@@ -707,36 +681,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("bigram_jaccard") >= 0.75)
     )
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("doc_id").alias("da"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "bigram_jaccard",
-        )
-    )
     # identical-content member pairs: bigram_jaccard = |g|/|g| = exactly
     # 1.0 in both engines; contents with EMPTY gram sets are excluded —
     # 0/0 is undefined in the oracle's division too
     nonempty = g.filter(F.size("g") >= 1).select("ckey")
-    kc = keyed.join(nonempty, "ckey").select("ckey", "doc_id")
-    within = (
-        kc.alias("x")
-        .join(
-            kc.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("bigram_jaccard"),
-        )
-    )
-    return cross.unionByName(within)
+    within = _same_content_pairs(
+        keyed.join(nonempty, "ckey").select("ckey", "doc_id"), "doc_id"
+    ).select("doc_a", "doc_b", F.lit(1.0).alias("bigram_jaccard"))
+    return _fan_out(rep_pairs, keyed, "doc_id", "bigram_jaccard").unionByName(within)
 
 
 @register(
@@ -752,13 +704,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (unit vectors ⇒ cosine = dot),
-    blocked by ``label`` and triangle-salted within the block (S=8,
-    Okcan & Riedewald fragment-replicate via
-    similarity.triangle_salted_self_join) so a hot label's pair space
-    spreads over S(S+1)/2 tasks instead of one reducer. Floats widen to
-    double BEFORE multiply so Spark and the oracle accumulate
-    identically; scores rounded to 6dp.
+    """Embedding-cosine near-dup pairs (cosine >= 0.35) inside a
+    ``label`` block, over distinct vectors (_cosine_pairs: triangle
+    salting, double widening, 6dp rounding, member expansion).
 
     Why salting and not (label, LSH bucket): at τ = 0.35 every
     qualifying pair in this corpus lies at cosine 0.35–0.48 (measured),
@@ -773,69 +721,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-threshold pair mining are (a) this fragment-replicate
     decomposition of the block quadratic and (b) raising τ into the LSH
     regime (dedup_minhash at τ = 0.9 shows that path)."""
-    from kwery_spark.operators.similarity import dot, triangle_salted_self_join
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    # contract identical vectors first (the corpus upscale replicates
-    # vectors verbatim, so the exact pair space must be bounded by
-    # DISTINCT vectors — the r5 content-cardinality rule; at sf10 the
-    # uncontracted form timed out on 100x-duplicated blocks). The dot of
-    # any member pair equals the dot of the reps because the arrays are
-    # identical, so expansion preserves exact oracle values.
-    keyed = emb.withColumn("ckey", F.md5(F.to_json(F.struct("label", "v"))))
-    groups = keyed.groupBy("label", "ckey").agg(
-        F.min("vec_id").alias("rep"), F.count(F.lit(1)).alias("cnt")
-    )
-    reps = groups.join(
-        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
-    ).select("label", "ckey", "rep", "v")
-    rep_pairs = (
-        triangle_salted_self_join(reps, "label", "rep", S=8)
-        .select(
-            F.col("a.ckey").alias("ckey_a"),
-            F.col("b.ckey").alias("ckey_b"),
-            F.round(dot("a.v", "b.v"), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= 0.35)
-    )
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("vec_id").alias("ia"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("vec_id").alias("ib"))
-    cross = (
-        rep_pairs.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("ia", "ib").alias("vec_a"),
-            F.greatest("ia", "ib").alias("vec_b"),
-            "cosine",
-        )
-    )
-    # identical-vector member pairs: cosine = dot(v, v), computed (not
-    # assumed 1.0 — the float self-dot of a unit vector is ~1 ± ulp and
-    # the oracle computes the same fold)
-    self_cos = groups.filter(F.col("cnt") >= 2).join(
-        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
-    ).select(F.col("ckey").alias("sckey"), F.round(dot("v", "v"), 6).alias("cosine"))
-    kc = keyed.select("ckey", "vec_id")
-    within = (
-        kc.alias("x")
-        .join(
-            kc.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .join(self_cos, F.col("x.ckey") == F.col("sckey"))
-        .select(
-            F.col("x.vec_id").alias("vec_a"),
-            F.col("y.vec_id").alias("vec_b"),
-            "cosine",
-        )
-        .filter(F.col("cosine") >= 0.35)
-    )
-    return cross.unionByName(within)
+    return _cosine_pairs(spark, sf_dir, 0.35)
 
 
 @register(
@@ -862,7 +748,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-dup pairs (r9, VERDICT item 7): EMBEDDING blocking +
+    """Semantic near-dup pairs: EMBEDDING blocking +
     TOKEN-CONTAINMENT verify — the composition SemDeDup-style pipelines
     run at corpus scale. Candidates are document pairs whose embeddings
     share an 8-bit random-hyperplane signature bucket (planes = corpus
@@ -874,7 +760,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkable exact predicate rather than a similarity guess.
 
     Scale: the pair space is bounded by DISTINCT (text, vector) content
-    (md5-contracted reps, the r5 content-cardinality rule — the upscale
+    (md5-contracted reps, the content-cardinality rule: the upscale
     clones docs 10x, so an uncontracted bucket join inflates 100x);
     within-bucket rep pairs are 2^8-partitioned by construction; member
     expansion is linear in the true output. One broadcast (8 plane
@@ -886,9 +772,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one materialization carries (doc_id, ckey, text, v): both the
     # member map (`keyed`) and the content reps derive from it, so the
-    # join + md5-over-(text, vector) runs ONCE (r9 review — the first
-    # cut rebuilt the joined lineage for each consumer, the r8
-    # alias-re-execution class)
+    # join + md5-over-(text, vector) runs ONCE instead of once per
+    # consumer of the joined lineage
     base = (
         docs.join(emb, docs.doc_id == emb.vec_id)
         .select(
@@ -936,8 +821,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             F.array_distinct(F.split(F.lower("text"), " ")).alias("toks"),
         )
-        # consumed by both self-join sides — materialize once (the r8
-        # alias-re-execution rule); bounded by distinct content
+        # consumed by both self-join sides — materialize once; bounded
+        # by distinct content
         .localCheckpoint(eager=True)
     )
     a, b = rsig.alias("a"), rsig.alias("b")
@@ -958,34 +843,13 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("containment") >= 0.8)
     )
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("doc_id").alias("da"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("doc_id").alias("db"))
-    cross = (
-        cand.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "containment",
-        )
-    )
     # identical-content member pairs: same text and vector, so same
     # bucket and containment = |g∩g|/|g| = exactly 1.0 in both engines
     # (token sets are never empty: split of any string yields >= 1 token)
-    within = (
-        keyed.alias("x")
-        .join(
-            keyed.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("containment"),
-        )
+    within = _same_content_pairs(keyed, "doc_id").select(
+        "doc_a", "doc_b", F.lit(1.0).alias("containment")
     )
-    return cross.unionByName(within)
+    return _fan_out(cand, keyed, "doc_id", "containment").unionByName(within)
 
 
 @register(
@@ -1179,15 +1043,14 @@ def dedup_substring_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     one DF-count shuffle, one equi-join on gram — no all-pairs step
     anywhere; the 32-doc cap bounds any bucket at C(32,2) pairs.
 
-    Content contraction (r5 sweep): gram document-frequency is counted
-    over DISTINCT contents, not raw rows — a corpus upscale that copies
-    every doc 100x inflates row-level df by 100 and pushed EVERY gram
-    past the [2,32] cap, silently emptying the result at sf10
-    (rows=0). Distinct-content df measures true cross-document reuse
-    (copies are dedup_exact's finding, not substring reuse), keeps the
-    cap meaningful at any duplication factor, and coincides exactly
-    with the oracle's row-level form at gate SF where contents are
-    unique. Cross-content rep pairs expand |A|x|B| to doc pairs with
+    Content contraction: gram document-frequency is counted over
+    DISTINCT contents, not raw rows — a corpus upscale that copies every
+    doc 100x inflates row-level df by 100 and pushes EVERY gram past the
+    [2,32] cap, silently emptying the result. Distinct-content df
+    measures true cross-document reuse (copies are dedup_exact's
+    finding, not substring reuse), keeps the cap meaningful at any
+    duplication factor, and coincides exactly with the oracle's
+    row-level form at gate SF where contents are unique. Cross-content rep pairs expand |A|x|B| to doc pairs with
     the same shared-span count; identical-content pairs are not emitted
     (they share everything by definition — that is exact duplication,
     a different operator's output)."""
@@ -1231,17 +1094,7 @@ def dedup_substring_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_shared_spans"))
         .filter(F.col("n_shared_spans") >= 3)
     )
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("doc_id").alias("da"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("doc_id").alias("db"))
-    return (
-        rep_pairs.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "n_shared_spans",
-        )
-    )
+    return _fan_out(rep_pairs, keyed, "doc_id", "n_shared_spans")
 
 
 @register(
@@ -1358,22 +1211,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
         F.array_distinct(F.split("text", " ")).alias("t"),
     )
-    minhashes = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.array_min(F.transform(F.col("t"), lambda t: F.xxhash64(i, t))),
-    )
-    hashed = docs.select("doc_id", "h", "t", minhashes.alias("mh")).repartition(
+    hashed = docs.select("doc_id", "h", "t", _minhash("t", 64).alias("mh")).repartition(
         "doc_id"
     )
-    bands = hashed.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(31)),
-                lambda j: F.xxhash64(F.slice("mh", j * 2 + 1, 2)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = hashed.select("doc_id", _bands("mh", 32, 2))
     b_bands = bands.filter(F.col("doc_id") % 5 == 0)
     e_bands = bands.filter(F.col("doc_id") % 5 != 0)
     cand = (

@@ -272,59 +272,12 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment-replicate theta-join decomposition (Okcan & Riedewald,
     SIGMOD'11), applied only within the label block. Results are
     bit-identical to the plain blocked join (the oracle is unchanged);
-    S tunes task size at 100 TB, not output."""
-    # contract identical vectors first (content-cardinality rule, r5:
-    # the corpus upscale replicates vectors verbatim, so the exact pair
-    # space is bounded by DISTINCT vectors — doc in dedup_embedding,
-    # which shares this exact structure; uncontracted sf10 timed out)
-    emb = _vecs(spark, sf_dir)
-    keyed = emb.withColumn("ckey", F.md5(F.to_json(F.struct("label", "v"))))
-    groups = keyed.groupBy("label", "ckey").agg(
-        F.min("vec_id").alias("rep"), F.count(F.lit(1)).alias("cnt")
-    )
-    reps = groups.join(
-        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
-    ).select("label", "ckey", "rep", "v")
-    rep_pairs = (
-        triangle_salted_self_join(reps, "label", "rep", S=8)
-        .select(
-            F.col("a.ckey").alias("ckey_a"),
-            F.col("b.ckey").alias("ckey_b"),
-            F.round(dot("a.v", "b.v"), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= 0.3)
-    )
-    ka = keyed.select(F.col("ckey").alias("ckey_a"), F.col("vec_id").alias("ia"))
-    kb = keyed.select(F.col("ckey").alias("ckey_b"), F.col("vec_id").alias("ib"))
-    cross = (
-        rep_pairs.join(ka, "ckey_a")
-        .join(kb, "ckey_b")
-        .select(
-            F.least("ia", "ib").alias("vec_a"),
-            F.greatest("ia", "ib").alias("vec_b"),
-            "cosine",
-        )
-    )
-    self_cos = groups.filter(F.col("cnt") >= 2).join(
-        keyed.select(F.col("vec_id").alias("rep"), "v"), "rep"
-    ).select(F.col("ckey").alias("sckey"), F.round(dot("v", "v"), 6).alias("cosine"))
-    kc = keyed.select("ckey", "vec_id")
-    within = (
-        kc.alias("x")
-        .join(
-            kc.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .join(self_cos, F.col("x.ckey") == F.col("sckey"))
-        .select(
-            F.col("x.vec_id").alias("vec_a"),
-            F.col("y.vec_id").alias("vec_b"),
-            "cosine",
-        )
-        .filter(F.col("cosine") >= 0.3)
-    )
-    return cross.unionByName(within)
+    S tunes task size at 100 TB, not output. The pair search runs over
+    DISTINCT vectors and expands to members (dedup._cosine_pairs, shared
+    with dedup_embedding)."""
+    from kwery_spark.operators.dedup import _cosine_pairs
+
+    return _cosine_pairs(spark, sf_dir, 0.3)
 
 
 @register(

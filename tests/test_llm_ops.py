@@ -1,7 +1,7 @@
-"""Tests for the LLM-data-pipeline operators (dedup / similarity /
-multimodal / UDF surface) that the oracle gate can't fully pin down:
-LSH recall, SimHash-vs-Jaccard agreement, IVF recall, and the fake
-decoder's exact feature values. Everything here is deterministic (seeded
+"""Tests for the LLM-data-pipeline operators (similarity / multimodal /
+UDF surface) that the oracle gate can't fully pin down: ANN recall and
+the fake decoder's exact feature values; the dedup family is in
+tests/test_dedup.py. Everything here is deterministic (seeded
 hashes, fixed corpus), so assertions are exact-bound, not statistical.
 """
 
@@ -19,86 +19,6 @@ from kwery_spark.registry import QUERIES
 @pytest.fixture(scope="module")
 def sf001():
     return "/root/testdata/sf0.001"
-
-
-def test_minhash_pairs_all_verified(spark, sf001):
-    from kwery_spark.operators.dedup import _minhash_doc_pairs
-
-    rows = _minhash_doc_pairs(spark, sf001).collect()
-    assert len(rows) > 5000  # corpus has built-in near-dups
-    assert all(r.jaccard >= 0.9 for r in rows)
-    assert all(r.doc_a < r.doc_b for r in rows)
-
-
-def test_minhash_summary_matches_expansion(spark, sf001):
-    """The registered banded summary (r11 contract) must agree with the
-    full doc-pair expansion it summarizes: per-band pair counts computed
-    ANALYTICALLY from multiplicities equal the materialized counts, and
-    each band's exemplar is the lexicographically smallest pair."""
-    import math
-
-    from kwery_spark.operators.dedup import _minhash_doc_pairs
-
-    pairs = _minhash_doc_pairs(spark, sf001).collect()
-    want: dict[int, list] = {}
-    for p in pairs:
-        band = math.floor(p.jaccard * 1000)
-        ent = want.setdefault(band, [0, (1 << 62, 1 << 62)])
-        ent[0] += 1
-        ent[1] = min(ent[1], (p.doc_a, p.doc_b))
-    got = QUERIES["dedup_minhash"](spark, sf001).collect()
-    assert {r.jband for r in got} == set(want)
-    for r in got:
-        assert r.n_pairs == want[r.jband][0], (r.jband, r.n_pairs, want[r.jband][0])
-        assert (r.ex_doc_a, r.ex_doc_b) == want[r.jband][1], r
-
-
-def test_simhash_agrees_with_jaccard(spark, sf001):
-    """Low-Hamming SimHash pairs should overwhelmingly be real near-dups:
-    a majority of them must appear in the exact Jaccard>=0.9 pair set.
-    (Consumes the full expansion — the registered key is the banded
-    summary since r11.)"""
-    from kwery_spark.operators.dedup import _minhash_doc_pairs, _simhash_doc_pairs
-
-    jac = {(r.doc_a, r.doc_b) for r in _minhash_doc_pairs(spark, sf001).collect()}
-    sim = {(r.doc_a, r.doc_b) for r in _simhash_doc_pairs(spark, sf001).collect()}
-    assert len(sim) > 1000
-    assert len(jac & sim) / len(sim) > 0.4
-
-
-def test_simhash_summary_matches_full_expansion(spark, sf001):
-    """The registered banded summary (r11 contract) must agree with the
-    materialized doc-pair expansion band by band: pair counts, the
-    lexicographic min exemplar per Hamming band (the dedup_minhash
-    cross-check, applied to simhash), AND n_units — the distinct
-    content-pair count, re-derived here by joining the expansion's doc
-    ids back to their content keys (r11 ADVICE: n_units is the one
-    column whose Spark formulation — row count of the union'd unit
-    frames — differs structurally from the oracle's
-    count(DISTINCT ck_lo||ck_hi), so it needs its own cross-check)."""
-    from kwery_spark.operators.dedup import (
-        _simhash_content_graph,
-        _simhash_doc_pairs,
-    )
-
-    pairs = _simhash_doc_pairs(spark, sf001).collect()
-    ck = {
-        r.doc_id: r.ckey
-        for r in _simhash_content_graph(spark, sf001)[0].collect()
-    }
-    want: dict[int, list] = {}
-    for p in pairs:
-        ent = want.setdefault(p.hamming, [0, (1 << 62, 1 << 62), set()])
-        ent[0] += 1
-        ent[1] = min(ent[1], (p.doc_a, p.doc_b))
-        ca, cb = ck[p.doc_a], ck[p.doc_b]
-        ent[2].add((min(ca, cb), max(ca, cb)))
-    got = QUERIES["dedup_simhash"](spark, sf001).collect()
-    assert {r.hamming for r in got} == set(want)
-    for r in got:
-        assert r.n_pairs == want[r.hamming][0], (r.hamming, r.n_pairs)
-        assert (r.ex_doc_a, r.ex_doc_b) == want[r.hamming][1], r
-        assert r.n_units == len(want[r.hamming][2]), (r.hamming, r.n_units)
 
 
 def test_ann_ivf_recall_vs_bruteforce(spark, sf001):
@@ -160,26 +80,6 @@ def test_udf_surface_registered():
         "udtf_python",
     ):
         assert key in QUERIES
-
-
-def test_dedup_clusters_are_consistent(spark, sf001):
-    """Every cluster member must reach its component root through the
-    pair graph; component = min member; all pair endpoints clustered."""
-    from kwery_spark.operators.dedup import _minhash_doc_pairs
-
-    pairs = _minhash_doc_pairs(spark, sf001).collect()
-    comp = {r.doc_id: r.component for r in QUERIES["dedup_clusters"](spark, sf001).collect()}
-    # both endpoints of every near-dup pair share a component
-    for p in pairs:
-        assert comp[p.doc_a] == comp[p.doc_b], (p.doc_a, p.doc_b)
-    # the component id is the minimum doc_id of its members
-    import collections
-
-    members = collections.defaultdict(list)
-    for d, c in comp.items():
-        members[c].append(d)
-    for c, ds in members.items():
-        assert c == min(ds)
 
 
 def test_kmeans_clusters_quality(spark, sf001):

@@ -64,23 +64,32 @@ def test_clone_gate_auto_tracks_measured_factor(spark):
             spark.conf.unset("spark.kwery.contract")
 
 
-def test_parquet_rows_recurses_and_fails_loudly(tmp_path):
-    """ADVICE r13 (catalog.py): parquet_rows is a plan-time literal
-    source — a partitioned (nested) layout must count fully, and an
-    empty dataset dir must raise, never return a silent 0."""
+def test_parquet_rows_recurses_and_fails_loudly(spark, tmp_path):
+    """parquet_rows and scan_splits are plan-time literal sources that
+    share one listing: a partitioned (nested) layout must count fully,
+    an empty dataset dir must raise, never return a silent 0 or 1, and
+    an unreadable footer must raise, never count as one split."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from py4j.protocol import Py4JJavaError
 
-    from kwery_spark.catalog import parquet_rows
+    from kwery_spark.catalog import parquet_rows, scan_splits
 
     ds = tmp_path / "t.parquet" / "k=1"
     ds.mkdir(parents=True)
-    pq.write_table(pa.table({"a": [1, 2, 3]}), ds / "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), ds / "part-0.parquet", row_group_size=2)
     (tmp_path / "t.parquet" / "_SUCCESS").write_text("")
     assert parquet_rows(str(tmp_path), "t") == 3
+    assert scan_splits(spark, str(tmp_path), "t") == 2
     (tmp_path / "empty.parquet").mkdir()
     with pytest.raises(ValueError, match="no .parquet data files"):
         parquet_rows(str(tmp_path), "empty")
+    with pytest.raises(ValueError, match="no .parquet data files"):
+        scan_splits(spark, str(tmp_path), "empty")
+    (tmp_path / "bad.parquet").mkdir()
+    (tmp_path / "bad.parquet" / "part-0.parquet").write_bytes(b"not a parquet footer")
+    with pytest.raises(Py4JJavaError):
+        scan_splits(spark, str(tmp_path), "bad")
 
 
 def test_broadcast_fits_bound():

@@ -1,5 +1,5 @@
-"""Round-9 operator invariants: as-of tolerance semantics, semantic-dedup
-blocking + verify guarantees, and the LPA degree cap."""
+"""Round-9 operator invariants: as-of tolerance semantics and the LPA
+degree cap."""
 
 from __future__ import annotations
 
@@ -38,69 +38,6 @@ def test_asof_tolerance_agrees_with_unbounded_asof(spark, sf_dir):
                 assert (r.purchase_ts - unbounded).total_seconds() > tol_sec, r
     # the tolerance must actually bind on the corpus (non-vacuous op)
     assert n_fresh > 0 and n_stale > 0, (n_fresh, n_stale)
-
-
-def test_dedup_semantic_verify_and_expansion(spark, sf_dir):
-    rows = QUERIES["dedup_semantic"](spark, sf_dir).collect()
-    assert rows, "dedup_semantic empty at smoke SF"
-    for r in rows:
-        assert r.doc_a < r.doc_b, r
-        assert 0.8 <= r.containment <= 1.0, r
-    # every identical-(text, embedding) doc pair must be present with
-    # containment exactly 1.0 (same vector => same bucket; same text =>
-    # containment 1)
-    from kwery_spark.catalog import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    keyed = docs.join(emb, docs.doc_id == emb.vec_id).select(
-        "doc_id", F.md5(F.to_json(F.struct("text", "v"))).alias("ckey")
-    )
-    dup_pairs = {
-        (r.a, r.b)
-        for r in keyed.alias("x")
-        .join(
-            keyed.alias("y"),
-            (F.col("x.ckey") == F.col("y.ckey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .collect()
-    }
-    emitted = {(r.doc_a, r.doc_b): r.containment for r in rows}
-    for p in dup_pairs:
-        assert emitted.get(p) == 1.0, p
-
-
-def test_dedup_semantic_pairs_share_a_bucket(spark, sf_dir):
-    """Blocking soundness: every emitted pair's embeddings agree on all
-    8 hyperplane signs (recomputed independently here)."""
-    from kwery_spark.catalog import table
-    from kwery_spark.operators.similarity import dot
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    planes = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
-        (F.col("vec_id") - 8).alias("pid"), F.col("v").alias("pv")
-    )
-    sig = {
-        r.vec_id: r.bucket
-        for r in emb.crossJoin(F.broadcast(planes))
-        .select(
-            "vec_id",
-            F.when(dot("v", "pv") > 0, F.pow(F.lit(2.0), F.col("pid")).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            .alias("bit"),
-        )
-        .groupBy("vec_id")
-        .agg(F.sum("bit").cast("long").alias("bucket"))
-        .collect()
-    }
-    for r in QUERIES["dedup_semantic"](spark, sf_dir).collect():
-        assert sig[r.doc_a] == sig[r.doc_b], r
 
 
 def test_lpa_runs_on_degree_capped_graph(spark, sf_dir):
